@@ -90,7 +90,10 @@ def main() -> None:
     # materialization drop out of the reported number.  Additive key
     # only: "value"/"queries" keep the r1..r12 methodology byte-for-byte
     # (note: the JVM/dim warmup above runs names[0] once, so its pass-1
-    # reading is session-warm like every round before).
+    # reading is session-warm like every round before).  Pass 1 is not
+    # cold for a query whose builder reuses a session-memoized dimension
+    # that an earlier query in the same pass already built, so
+    # "queries_cold" can understate cold cost and depends on HEADLINE order.
     per_query: dict[str, float] = {}
     cold: dict[str, float] = {}
     for _pass in range(3):

@@ -11,6 +11,7 @@ Reference parity citations are given per function (file:line into
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import Column
@@ -30,17 +31,22 @@ def _col(c: ColumnOrName) -> Column:
 # to the F.col/F.lit when-chain when the column name is a plain unqualified
 # identifier (a qualified/quoted name would resolve differently), every key
 # is a plain string (quotes would break the literal), and every value is a
-# float (an int would parse as a D-suffixed double vs F.lit's IntegerType).
+# finite float (an int would parse as a D-suffixed double vs F.lit's
+# IntegerType; inf/nan would render as `infD`/`nanD`, an unresolved column).
 # Guard the fast path on exactly those shapes — constant-table-only, never
 # data-derived keys — and fall back to the expression-builder path otherwise.
 _PLAIN_IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
+
+
+def _finite_float(v: object) -> bool:
+    return isinstance(v, float) and math.isfinite(v)
 
 
 def _expr_fast_ok(col_name: object, mapping_items) -> bool:
     if not (isinstance(col_name, str) and _PLAIN_IDENT.match(col_name)):
         return False
     return all(isinstance(k, str) and "'" not in k and "\\" not in k
-               and isinstance(v, float)
+               and _finite_float(v)
                for k, v in mapping_items)
 
 
@@ -58,7 +64,7 @@ def map_literal(mapping: dict[str, float], key: ColumnOrName,
     items = [(k, v) for k, v in mapping.items() if k != "default"]
     dflt = mapping.get("default", default)
     if isinstance(key, str) and _expr_fast_ok(key, items) \
-            and isinstance(dflt, float):
+            and _finite_float(dflt):
         arms = " ".join(f"WHEN lower({key}) = '{k}' THEN {v!r}D"
                         for k, v in items)
         return F.expr(f"CASE {arms} ELSE {dflt!r}D END")
@@ -179,7 +185,7 @@ def route_type_weight(planning_type: ColumnOrName,
             and _expr_fast_ok(accident_type,
                               ((ak, w) for (_, ak), w
                                in C.ROUTE_TYPE_WEIGHTS.items())) \
-            and isinstance(C.DEFAULT_ROUTE_TYPE_WEIGHT, float):
+            and _finite_float(C.DEFAULT_ROUTE_TYPE_WEIGHT):
         p = f"lower({planning_type})"
         a = f"lower({accident_type})"
         arms = " ".join(

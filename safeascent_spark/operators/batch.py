@@ -112,9 +112,7 @@ def _location_base_df(spark: SparkSession, sf_dir: str,
                .drop("dx", "dy", "a_cx", "a_cy"))
         pairs = lm.join(F.broadcast(a9), ["cx", "cy"])
     else:
-        # (r13: a latitude-band equi-join replacing this cross join was
-        # measured and rejected — see scoring.LAT_BAND_K; the fused
-        # lat-gap conjunct below already short-circuits pruned pairs.)
+        # No latitude-band join: the fused lat-gap filter below is cheaper.
         pairs = lm.crossJoin(F.broadcast(a.drop("a_cx", "a_cy")))
     pairs = pairs.join(
         F.broadcast(wsim),

@@ -1236,7 +1236,9 @@ def q_tpch_q21_lone_late_supplier(spark: SparkSession,
     # for BOTH aggregates (same-key rows land together), so the fact
     # grain crosses the network once; the map-side combine the first
     # exchange had bought was near-nil (lineitem's (order, supplier)
-    # pairs are almost all distinct already).
+    # pairs are almost all distinct already).  No explicit width: the
+    # exchange starts at spark.sql.shuffle.partitions and AQE coalesces
+    # it (on by default since Spark 3.2; session.py sets it explicitly).
     per_pair = (flagged.repartition("l_orderkey")
                 .groupBy("l_orderkey", "l_suppkey")
                 .agg(F.max("late").alias("any_late")))

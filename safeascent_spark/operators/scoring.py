@@ -203,44 +203,6 @@ def _lat_gap_prefilter(pairs: DataFrame, cutoff_km: float,
     return pairs.filter(gap <= F.lit(cutoff_km))
 
 
-# r13 (VERDICT r12 item 1) — latitude-band equi-join: MEASURED AND
-# REJECTED for the declared queries; the mechanism below stays available
-# (exactness pinned by tests/test_advice_r13.py) as the documented
-# alternative for a regime where pair EMISSION is not the cost.
-#
-# The idea: band latitude into the join key (dim replicated to
-# +-LAT_BAND_K bands of width cutoff/LAT_BAND_K) so the hash join never
-# streams out-of-reach dim rows — every pair with |dlat|*R <= cutoff has
-# a band gap <= LAT_BAND_K (floor monotonicity) and is generated exactly
-# once (each replica carries a distinct band value, the probe side has
-# one), while a dropped pair has band gap > LAT_BAND_K => |dlat|*R >
-# cutoff => exactly a row the caller's lat-gap prefilter / significance
-# filter discards anyway.  Structurally it works: K=2 generates 51.3% of
-# the 15M uncapped sf0.1 pairs (prefilter floor 42.6%;
-# tools/r13_band_probe.py).  But wall-clock it is NEUTRAL TO NEGATIVE at
-# both SFs (sf1 pair stage 64.4s banded vs 62.7s unbanded; sf0.1 A/B
-# +1.4%): whole-stage codegen fuses the r12 lat-gap conjunct into the
-# join's emission loop, so a pruned pair already costs only an iterator
-# step + one multiply/compare — the band can only save that, while its
-# 2K+1 dim replication multiplies the broadcast (7 GB at ~1M accidents
-# vs 1.4 GB plain, against the 8 GB relation cap).  Emission of the
-# SURVIVING pairs, which banding cannot reduce, is where the time goes.
-LAT_BAND_K = 2
-
-
-def _lat_band(rlat_col: str, cutoff_km: float) -> F.Column:
-    band_rad = (cutoff_km / C.EARTH_RADIUS_KM) / LAT_BAND_K
-    return F.floor(F.col(rlat_col) / F.lit(band_rad)).cast("int")
-
-
-def _band_replicate(df: DataFrame, rlat_col: str, cutoff_km: float,
-                    out: str = "lband") -> DataFrame:
-    offs = F.array(*[F.lit(i) for i in range(-LAT_BAND_K, LAT_BAND_K + 1)])
-    return (df.withColumn("_db", F.explode(offs))
-              .withColumn(out, _lat_band(rlat_col, cutoff_km) + F.col("_db"))
-              .drop("_db"))
-
-
 def influence_pairs_df(spark: SparkSession, sf_dir: str,
                        pred_date: str = domain.PRED_DATE,
                        routes: DataFrame | None = None) -> DataFrame:
@@ -327,8 +289,7 @@ def dim_broadcasts(spark: SparkSession, sf_dir: str,
 def _candidate_pairs(spark: SparkSession, sf_dir: str, pred_date: str,
                      routes: DataFrame | None, grid: bool,
                      accidents: DataFrame | None = None,
-                     broadcast_dim: bool | None = True,
-                     band_km: float | None = None) -> DataFrame:
+                     broadcast_dim: bool | None = True) -> DataFrame:
     """Join routes against the accident-class dim (+ the weather-factor dim).
 
     ``grid=False``: equi-join on route_type alone — every route meets every
@@ -368,12 +329,6 @@ def _candidate_pairs(spark: SparkSession, sf_dir: str, pred_date: str,
                 .withColumn("cy", F.col("a_cy") + F.col("dy"))
                 .drop("dx", "dy"))
         keys = ["route_type", "cx", "cy"]
-    elif band_km is not None and band_km > 0.0:
-        # lossless only when the caller's own filters discard every pair
-        # with |dlat| * R > band_km (see _band_replicate)
-        ax = _band_replicate(ax, "a_rlat", band_km)
-        r = r.withColumn("lband", _lat_band("r_rlat", band_km))
-        keys = ["route_type", "lband"]
     else:
         keys = ["route_type"]
     pairs = domain.fan_out(r).join(
@@ -529,8 +484,8 @@ def top_contributors_df(spark: SparkSession, sf_dir: str,
     # significance-reach latitude-gap prefilter is lossless here: pairs
     # whose latitude gap alone puts them beyond significance_reach_km
     # never evaluate the haversine + three-exp influence expression.
-    # (r13: a band equi-join on the same reach was measured and rejected —
-    # see the LAT_BAND_K note above.)
+    # A latitude-band equi-join on the same reach was slower (sf1 64.4 s vs
+    # 62.7 s): codegen already fuses this filter into the join loop.
     reach = significance_reach_km(spark, sf_dir)
     cand = _candidate_pairs(spark, sf_dir, pred_date, None, grid=False)
     pairs = _pair_influence_select(_lat_gap_prefilter(cand, reach))

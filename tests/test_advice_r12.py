@@ -13,10 +13,6 @@
    materialization instead of pinning a fresh persist-registry copy
    per call (the accumulate-per-call class ADVICE r10 first flagged
    for ``ml._training_frame``).
-3. The r12 staging comment off-by-one (15 vs 16 regates / 22 vs
-   23-row union) is pinned numerically in tests/test_rotation.py
-   (``test_r12_window_is_the_verdict_plan`` asserts len(front) == 16
-   and union == 23).
 """
 
 from __future__ import annotations
@@ -102,7 +98,7 @@ def test_query_level_checkpoints_do_not_accumulate(spark, qname):
     registry entries only once (the memoized upstream is shared; the
     second build pins nothing new)."""
     import __spark_entry__ as E
-    q = E._builders()[qname]
+    q = E.queries()[qname]
     q(spark, SF_SMOKE).collect()
     n = _registry_len(spark)
     q(spark, SF_SMOKE).collect()

@@ -1,6 +1,6 @@
-"""Round-13 optimization pins: the latitude-band pair join, the
-significance-reach guard, the F.expr fast-path shape guards, and the
-search_mmr session memoization (VERDICT r12 items 1/3, ADVICE r12)."""
+"""Round-13 optimization pins: the significance-reach guard, the F.expr
+fast-path shape guards, and the search_mmr session memoization (VERDICT
+r12 item 3, ADVICE r12)."""
 
 from __future__ import annotations
 
@@ -12,41 +12,6 @@ from safeascent_spark import domain
 from safeascent_spark import kernels as K
 from safeascent_spark.operators import scoring
 from tests.conftest import SF_ORACLE
-
-
-def test_band_join_generates_exactly_the_prefilter_survivors_superset(spark):
-    """The banded pair stage must (a) generate a SUBSET of the unbanded
-    route_type join's pairs and (b) after the row-level lat-gap prefilter
-    yield EXACTLY the same pair set — banding only skips generation of
-    rows the prefilter provably discards."""
-    reach = scoring.significance_reach_km(spark, SF_ORACLE)
-    unbanded = scoring._candidate_pairs(
-        spark, SF_ORACLE, domain.PRED_DATE, None, grid=False)
-    banded = scoring._candidate_pairs(
-        spark, SF_ORACLE, domain.PRED_DATE, None, grid=False, band_km=reach)
-
-    def keyset(df):
-        return {(r.route_id, r.accident_id)
-                for r in df.select("route_id", "accident_id").collect()}
-
-    k_unb = keyset(scoring._lat_gap_prefilter(unbanded, reach))
-    k_band_raw = keyset(banded.drop("lband"))
-    k_band = keyset(scoring._lat_gap_prefilter(banded, reach))
-    assert k_band == k_unb                       # identical final pair set
-    assert k_band_raw.issuperset(k_unb)          # band is a superset pre-gap
-    n_all = unbanded.count()
-    assert len(k_band_raw) < n_all               # and it actually pruned
-
-
-def test_band_join_no_duplicate_pairs(spark):
-    """Each (route, accident) pair must be generated at most once — the
-    dim replicas carry distinct band values, the probe row has one."""
-    reach = scoring.significance_reach_km(spark, SF_ORACLE)
-    banded = scoring._candidate_pairs(
-        spark, SF_ORACLE, domain.PRED_DATE, None, grid=False, band_km=reach)
-    dup = (banded.groupBy("route_id", "accident_id")
-                 .count().filter(F.col("count") > 1).count())
-    assert dup == 0
 
 
 def test_significance_reach_zero_when_fmax_below_threshold(spark, monkeypatch):
@@ -63,9 +28,10 @@ def test_significance_reach_zero_when_fmax_below_threshold(spark, monkeypatch):
         cache.update(saved)
 
 
-def test_expr_fast_path_guards_fall_back_identically(spark):
-    """ADVICE r12: qualified/exotic column names and non-float values must
-    take the expression-builder path and still compute the same result."""
+def test_expr_fast_path_guards_fall_back_identically(spark, monkeypatch):
+    """ADVICE r12: qualified/exotic column names and non-float or
+    non-finite values must take the expression-builder path and still
+    compute the same result."""
     df = spark.createDataFrame(
         [("Trad",), ("sport",), (None,), ("??",)], "route_type string")
     fast = df.select(K.spatial_bandwidth("route_type").alias("v")).collect()
@@ -79,6 +45,24 @@ def test_expr_fast_path_guards_fall_back_identically(spark):
     assert not K._expr_fast_ok("route type", C.SPATIAL_BANDWIDTH_KM.items())
     assert not K._expr_fast_ok("route_type", [("k'ey", 1.0)])
     assert not K._expr_fast_ok("route_type", [("key", 1)])
+    assert not K._expr_fast_ok("route_type", [("key", float("inf"))])
+    assert not K._expr_fast_ok("route_type", [("key", float("nan"))])
+    # inf/nan arms and defaults would render as `infD`/`nanD` in F.expr
+    # text, which Spark parses as column names
+    odd = {"trad": float("inf"), "sport": 1.0, "default": float("nan")}
+    fast = df.select(K.map_literal(odd, "route_type", 0.0).alias("v"))
+    slow = df.select(K.map_literal(odd, F.col("route_type"), 0.0).alias("v"))
+    assert [repr(r.v) for r in fast.collect()] \
+        == [repr(r.v) for r in slow.collect()] \
+        == ["inf", "1.0", "nan", "nan"]
+    monkeypatch.setattr(C, "DEFAULT_ROUTE_TYPE_WEIGHT", float("-inf"))
+    pair = spark.createDataFrame(
+        [("trad", "sport"), ("trad", "??")], "p string, a string")
+    fast = pair.select(K.route_type_weight("p", "a").alias("v")).collect()
+    slow = pair.select(
+        K.route_type_weight(F.col("p"), F.col("a")).alias("v")).collect()
+    assert [r.v for r in fast] == [r.v for r in slow]
+    assert fast[1].v == float("-inf")
 
 
 def test_search_mmr_base_memoized_per_session_sf(spark):

@@ -6,7 +6,7 @@ From round 10 on, every new ``queries()`` registration must carry a
 committed bit-exact row at BOTH sf0.01 and sf0.1 in the round's
 ``CROSSSF_r{N}.json`` BEFORE it ships — the artifact
 ``tools/crosssf_check.py`` writes.  This test recomputes the claim
-from the artifact + the ``_R{N}_NEW`` lists so the invariant fails
+from the artifact + the per-round lists below so the invariant fails
 loudly if a wave registers without its dual-SF evidence (the way
 ``tests/test_plans.py`` enforces 100% plan-snapshot coverage).
 """
@@ -20,12 +20,19 @@ import __spark_entry__ as E
 
 REPO = Path(__file__).resolve().parent.parent
 
-# round -> new-registration list; extended each round alongside the
-# _R{N}_NEW list itself.
+# round -> the queries first registered in that round; a round that
+# registers queries adds its row here.
 GATED_WAVES = {
-    10: E._R10_NEW,
-    11: E._R11_NEW,
-    12: E._R12_NEW,
+    10: ["graph_degree_histogram", "tpch_q11_value_parts",
+         "tpch_q20_qty_surplus", "dq_column_correlation",
+         "dq_seasonal_mad_anomaly", "text_digram_entropy",
+         "embedding_source_drift", "eval_brier_decomposition",
+         "multimodal_phash_knn", "graph_clustering_coefficient"],
+    11: ["s8_score_roundtrip", "s9_retention_survivors",
+         "dedup_longest_span", "ml_isotonic_calibration",
+         "tpch_q9_product_profit", "events_late_arrival_audit",
+         "batch_scores_incremental", "embedding_matryoshka_recall"],
+    12: ["ann_ivf_incremental", "sink_compaction_roundtrip"],
 }
 
 

@@ -1,327 +1,41 @@
-"""Machine-check of the driver-window rotation bookkeeping (VERDICT r7
-item 3, extended each round — r10 per VERDICT r9 items 1 and 6).
+"""Pins the driver order of ``queries()``.
 
-The registration-order machinery in ``__spark_entry__.py`` is ~150
-lines of list arithmetic whose invariants previously lived only in
-comments — and drifted once (ADVICE r6 low).  This test recomputes
-window membership, backlog counts, and staleness ages from the ``_R*``
-lists themselves and fails if the published numbers drift again.
-
-The driver hash-checks exactly the FIRST 50 registered queries, so
-``list(queries())[:50]`` IS the round's correctness window.
+The driver hash-checks exactly the first 50 registered queries, so
+``list(queries())[:50]`` is the correctness window and the order itself
+is part of the contract.
 """
 
 from __future__ import annotations
 
-import json
+import hashlib
 from pathlib import Path
 
 import __spark_entry__ as E
 
 REPO = Path(__file__).resolve().parent.parent
 
+ORDER_SHA256 = (
+    "6f62858f89fb3ac0deec10e27f3624f1a53a3d6b5b87a250d115b8618266cbfe")
+
 
 def _order():
     return list(E.queries())
 
 
-def _r8_order():
-    return E._r8_order(E._builders())
-
-
-def _r9_order():
-    return E._r9_order(E._builders())
-
-
-def _r10_order():
-    return E._r10_order(E._builders())
-
-
-def _r11_order():
-    return E._r11_order(E._builders())
-
-
-def _r12_order():
-    return E._r12_order(E._builders())
-
-
-def test_r13_window_is_the_staged_plan():
-    """The r13 window is EXACTLY positions 50..99 of the r12
-    registration order (staged in-round by r12): the 8 r11-new at
-    their registration+2 deadline (s8/s9's regate and debut coincide;
-    _R13_REGATE_FRONT is empty), then the 42 next-stalest rows
-    draining the last pre-r7-era evidence."""
+def test_driver_order_is_pinned():
+    """307 unique names in a fixed order; positions 50-56 hold the seven
+    queries whose code changed outside the previous window, so the next
+    window re-checks them first."""
     order = _order()
-    win = order[:50]
-    assert len(set(win)) == 50
-    assert win == _r12_order()[50:100]
-    front = list(E._R13_REGATE_FRONT)
-    assert win[:len(front)] == front
-    k = len(set(front) | set(E._R11_NEW))
-    assert set(E._R11_NEW) <= set(win[:k])
-    # the stale rows saw no driver row in r8/r9/r10/r11/r12
-    stale = win[k:]
-    recent = (set(E._R8_WINDOW) | set(_r9_order()[:50])
-              | set(_r10_order()[:50]) | set(_r11_order()[:50])
-              | set(_r12_order()[:50]))
-    assert not set(stale) & recent
-    assert not set(stale) & set(E._R12_NEW)
-
-
-def test_r12_window_is_the_verdict_plan():
-    """Historical pin: the r12 window was positions 50..99 of the r11
-    registration order (VERDICT r11 item 1, staged in-round by r11):
-    the 16 r11 code-changed regates first (_R12_REGATE_FRONT — the
-    full post-fix multimodal family + winnowing_pairs + the ml family
-    + graph_degree_histogram), then the 7 remaining r10-new at their
-    registration+2 deadline (3 of the 10 are themselves regates, so
-    the union is 23 rows), then the 27 next-stalest rows — and the
-    recorded driver artifact matches it exactly."""
-    win = _r12_order()[:50]
-    assert len(set(win)) == 50
-    assert win == _r11_order()[50:100]
-    front = list(E._R12_REGATE_FRONT)
-    assert len(front) == 16
-    assert win[:16] == front
-    k = len(set(front) | set(E._R10_NEW))
-    assert k == 23
-    assert set(E._R10_NEW) <= set(win[:k])
-    # the 27 stale rows saw no driver row in r8/r9/r10/r11
-    stale = win[k:]
-    recent = (set(E._R8_WINDOW) | set(_r9_order()[:50])
-              | set(_r10_order()[:50]) | set(_r11_order()[:50]))
-    assert not set(stale) & recent
-    assert not set(stale) & (set(E._R11_NEW) | set(E._R12_NEW))
-    r12 = json.loads((REPO / "CORRECTNESS_r12.json").read_text())
-    assert set(r12) == set(win)
-    assert all(v["hash_match"] for v in r12.values())
-
-
-def test_r11_window_is_the_verdict_plan():
-    """Historical pin: the r11 window was positions 50..99 of the r10
-    order (the ADVICE-r9 Q2 floor-guard regate first, then the rest of
-    the 15 r9-new at their registration+2 deadline, then the 35
-    next-stalest rows draining the 26 r5-era rows) — and the recorded
-    driver artifact matches it exactly."""
-    win = _r11_order()[:50]
-    assert len(set(win)) == 50
-    assert win == _r10_order()[50:100]
-    assert win[:1] == list(E._R11_REGATE_FRONT)
-    assert set(win[:15]) == set(E._R9_NEW)
-    # the 35 stale rows saw no driver row in r8/r9/r10
-    stale = win[15:]
-    recent = (set(E._R8_WINDOW) | set(_r9_order()[:50])
-              | set(_r10_order()[:50]))
-    assert not set(stale) & recent
-    assert not set(stale) & (set(E._R10_NEW) | set(E._R11_NEW))
-    r11 = json.loads((REPO / "CORRECTNESS_r11.json").read_text())
-    assert set(r11) == set(win)
-    assert all(v["hash_match"] for v in r11.values())
-
-
-def test_r10_window_is_the_verdict_plan():
-    """Historical pin: the r10 window was positions 50..99 of the r9
-    order (the 7 r9 code-changed re-gates first, then the 6 r8-new
-    never-checked, then the 37 next-stalest r4/r5-era rows) — and the
-    recorded driver artifact matches it exactly."""
-    win = _r10_order()[:50]
-    assert len(set(win)) == 50
-    assert win == _r9_order()[50:100]
-    # the 7 r9 code-changed re-gates lead
-    assert win[:7] == list(E._R10_REGATE_FRONT)
-    # all 6 r8-new never-checked are in (backlog zeroed)
-    assert set(E._R8_NEW) == set(win[7:13])
-    # the 37 stale rows saw no driver row in r7/r8/r9
-    stale = win[13:]
-    recent = (set(E._R7_WINDOW) | set(E._R8_WINDOW)
-              | set(_r9_order()[:50]))
-    assert not set(stale) & recent
-    assert not set(stale) & (set(E._R9_NEW) | set(E._R10_NEW))
-    r10 = json.loads((REPO / "CORRECTNESS_r10.json").read_text())
-    assert set(r10) == set(win)
-    assert all(v["hash_match"] for v in r10.values())
-
-
-def test_r9_window_is_the_verdict_plan():
-    """Historical pin: the r9 window was positions 50..99 of the r8
-    order (two r8 code-changed re-gates first, the 17 r8-tail
-    never-checked, then the 33 oldest r4-evidence rows) — and the
-    recorded driver artifact matches it exactly."""
-    win = _r9_order()[:50]
-    assert len(set(win)) == 50
-    assert win == _r8_order()[50:100]
-    assert win[:2] == list(E._R9_REGATE_FRONT)
-    assert set(E._R8_TAIL_NEVER) <= set(win)
-    assert win[:17] == list(E._R8_TAIL_NEVER)
-    r9 = json.loads((REPO / "CORRECTNESS_r09.json").read_text())
-    assert set(r9) == set(win)
-    assert all(v["hash_match"] for v in r9.values())
-
-
-def test_r8_window_is_the_verdict_plan():
-    """Historical pin: r8 window membership == all 36 _R7_TAIL_NEVER +
-    first 14 _R7_NEW, code-changed first — matches the driver row."""
-    win = list(E._R8_WINDOW)
-    assert len(win) == 50 and len(set(win)) == 50
-    assert set(win) == set(E._R7_TAIL_NEVER) | set(E._R7_NEW[:14])
-    assert win[:len(E._R8_CODE_CHANGED)] == list(E._R8_CODE_CHANGED)
-    assert set(E._R8_CODE_CHANGED) <= set(E._R7_NEW[:14])
-    r8 = json.loads((REPO / "CORRECTNESS_r08.json").read_text())
-    assert set(r8) == set(win)
-    assert all(v["hash_match"] for v in r8.values())
-
-
-def test_published_list_sizes():
-    assert len(E._R6_NEW) == 62
-    assert len(E._R6_TAIL_NEVER) == 24
-    assert len(E._R7_NEW) == 31
-    assert len(E._R7_TAIL_NEVER) == 36
-    assert len(E._R7_WINDOW) == 50
-    assert len(E._R8_TAIL_NEVER) == 17
-    assert set(E._R8_TAIL_NEVER) == set(E._R7_NEW[14:])
-    n_front = len(E._R9_REGATE_FRONT)
-    assert E._R8_TAIL_NEVER[:n_front] == list(E._R9_REGATE_FRONT)
-    # VERDICT r7 item 2 (standing): new-per-round cap
-    assert len(E._R8_NEW) <= 15
-    assert len(E._R9_NEW) <= 15
-    assert len(E._R10_NEW) <= 15
-    # r9 code-changed bookkeeping: r9-window members re-gated in r9
-    # automatically; every non-member led the r10 window
-    win9 = set(_r9_order()[:50])
-    rest9 = (set(E._R9_CODE_CHANGED) - win9
-             - set(E._R8_NEW) - set(E._R9_NEW))
-    assert rest9 == set(E._R10_REGATE_FRONT) - set(E._R8_NEW)
-    assert set(E._R10_REGATE_FRONT) <= set(E._R9_CODE_CHANGED)
-    # r10 code-changed bookkeeping: r10-window members re-gated in r10
-    # automatically; every non-member led the staged r11 window (all
-    # r10 code changes were ADVICE fixes to r9-new or r10-window rows,
-    # so the front is a subset of _R9_NEW)
-    rest10 = set(E._R10_CODE_CHANGED) - set(_r10_order()[:50])
-    assert rest10 == set(E._R11_REGATE_FRONT)
-    assert set(E._R11_REGATE_FRONT) <= set(E._R9_NEW)
-    # r11 cap + code-changed bookkeeping: r11-window members re-gated
-    # in r11 automatically; every non-member leads the r12 window
-    assert len(E._R11_NEW) <= 15
-    rest11 = set(E._R11_CODE_CHANGED) - set(_r11_order()[:50])
-    assert rest11 == set(E._R12_REGATE_FRONT)
-    assert set(E._R12_REGATE_FRONT) < set(E._R11_CODE_CHANGED)
-    # r12 cap (VERDICT r11 item 2: waves now bounded at 5 net-new so
-    # the 50-slot refresh period stops stretching) + code-changed
-    # bookkeeping: r12-window members re-gated in r12 automatically;
-    # s8/s9 are _R11_NEW rows debuting in the r13 window anyway; every
-    # other non-member leads that window
-    assert len(E._R12_NEW) <= 5
-    rest12 = (set(E._R12_CODE_CHANGED) - set(_r12_order()[:50])
-              - set(E._R11_NEW))
-    assert rest12 == set(E._R13_REGATE_FRONT)
-    assert set(E._R13_REGATE_FRONT) <= set(E._R12_CODE_CHANGED)
-    # r13 code-changed bookkeeping (optimization round 2, zero new
-    # registrations): the one r13-window member (text_bm25_multi)
-    # re-gates this round automatically; every other changed row leads
-    # the staged r14 window
-    assert len(E._R13_NEW) == 0
-    rest13 = set(E._R13_CODE_CHANGED) - set(_order()[:50])
-    assert rest13 == set(E._R14_REGATE_FRONT)
-    assert set(E._R14_REGATE_FRONT) < set(E._R13_CODE_CHANGED)
-
-
-def test_windows_partition_history():
-    """No query is in two CONSECUTIVE windows unless code-changed, and
-    the recorded driver artifacts match the reconstructed windows."""
-    assert not set(E._R7_WINDOW) & set(E._R8_WINDOW)
-    win9 = set(_r9_order()[:50])
-    assert not win9 & set(E._R8_WINDOW)
-    win10 = set(_r10_order()[:50])
-    assert not win10 & win9
-    win11 = set(_r11_order()[:50])
-    assert not win11 & win10
-    win12 = set(_r12_order()[:50])
-    assert not win12 & win11
-    win13 = set(_order()[:50])
-    assert not win13 & win12
-    r7 = json.loads((REPO / "CORRECTNESS_r07.json").read_text())
-    assert set(r7) == set(E._R7_WINDOW)
-    assert all(v["hash_match"] for v in r7.values())
-
-
-def test_registration_order_and_r14_readiness():
-    order = _order()
-    n = len(order)
-    assert len(set(order)) == n
-    # r13 added no queries; the r12-new sit just ahead of the (empty)
-    # r13 tail and debut in the staged r14 window below
-    assert list(E._R13_NEW) == []
-    # positions 50..99 are the ready-made r14 window: the r13
-    # code-changed non-window regates first (_R14_REGATE_FRONT — the
-    # per-axis-cell capped paths, pagerank, search_mmr, q21,
-    # bm25_topk), then the 2 r12-new at their registration+2 deadline,
-    # then the next-stalest rows.  The pre-r7/r7-era staleness pool is
-    # nearly drained (see test_staleness_ages_match_note), so the
-    # stalest remaining evidence is now r7/r8-era — the cycle wraps:
-    # nothing in the rest may carry evidence newer than the r8 window.
-    r14 = order[50:100]
-    front = list(E._R14_REGATE_FRONT)
-    assert r14[:len(front)] == front
-    k = len(set(front) | set(E._R12_NEW))
-    assert set(E._R12_NEW) <= set(r14[:k])
-    rest = r14[k:]
-    newer_than_r8 = (set(_r9_order()[:50]) | set(_r10_order()[:50])
-                     | set(_r11_order()[:50]) | set(_r12_order()[:50])
-                     | set(order[:50]))
-    assert not set(rest) & newer_than_r8
-
-
-def test_staleness_ages_match_note():
-    """Recompute the projected after-r13 evidence ages from the lists:
-    50 r13-fresh / 50 r12-fresh / 50 r11-fresh / r10/r9/r8-fresh minus
-    the regates later windows pulled forward / never = |_R12_NEW|;
-    remainder r7-era; total matches the registered surface.  The
-    structural payoff of the r13 window (8 debuts + 42 stalest): ZERO
-    rows still carry pre-r7-era evidence — the staleness ceiling
-    VERDICT r11 item 2 worried about cleared on schedule — and the 11
-    remaining r7-era rows all sit inside the staged r14 window."""
-    order = _order()
-    n = len(order)
-    win13 = set(order[:50])
-    win12 = set(_r12_order()[:50])
-    win11 = set(_r11_order()[:50])
-    win10 = set(_r10_order()[:50])
-    win9 = set(_r9_order()[:50])
-    never = (set(E._R12_NEW) | set(E._R13_NEW)) - win13
-    ages = {
-        "r13": win13,
-        "r12": win12 - win13,
-        "r11": win11 - win13 - win12,
-        "r10": win10 - win13 - win12 - win11,
-        "r9": win9 - win13 - win12 - win11 - win10,
-        "r8": set(E._R8_WINDOW) - win13 - win12 - win11 - win10 - win9,
-        "r7": (set(E._R7_WINDOW) - win13 - win12 - win11 - win10 - win9
-               - set(E._R8_WINDOW)),
-        "never": never,
-    }
-    seen: set = set()
-    for k, s in ages.items():
-        assert not s & seen, k
-        seen |= s
-    assert len(ages["r13"]) == 50
-    assert len(ages["r12"]) == 50
-    assert len(ages["r11"]) == 50
-    # the r12 window pulled 2 r10-fresh (ml model/cv) + 2 r9-fresh
-    # (png meta/resize) regates forward; earlier windows pulled 2+2+1;
-    # the r13 window pulled nothing forward (its front is empty)
-    assert len(ages["r10"]) == 48
-    assert len(ages["r9"]) == 48
-    assert len(ages["r8"]) == 48
-    assert len(ages["r7"]) == 11
-    assert len(ages["never"]) == len(E._R12_NEW) + len(E._R13_NEW)
-    # NOTHING is left beyond the r7 era: the pre-r7 evidence block is
-    # fully drained, and the 11 r7-era rows are staged into r14
-    rest = set(order) - seen
-    assert len(rest) == 0
-    staged = set(order[50:100])
-    assert ages["r7"] <= staged
-    # cycle-length invariant quoted in the note: ceil(N/50)
-    assert -(-n // 50) == (n + 49) // 50
+    assert len(order) == 307
+    assert len(set(order)) == len(order)
+    digest = hashlib.sha256("\n".join(order).encode()).hexdigest()
+    assert digest == ORDER_SHA256
+    assert order[50:57] == [
+        "risk_scores_capped", "top_contributors_capped",
+        "batch_scores_capped", "graph_pagerank", "search_mmr",
+        "tpch_q21_lone_late_supplier", "text_bm25_topk",
+    ]
 
 
 def test_oracle_coverage_of_registered_queries():

@@ -8,10 +8,10 @@ bar — and sf0.1 — where the r9 audit caught overflow / calibration /
 saturation defects invisible at the small SF), and MERGES the results
 into ``CROSSSF_r{round}.json`` at the repo root.  The merge is
 incremental so each wave appends its rows under the same round file;
-``tests/test_crosssf_gate.py`` machine-checks that every ``_R10_NEW``
-(and later-round ``_R{N}_NEW``) registration has a passing row at both
-SFs — making the standing invariant "every new wave gates at BOTH SFs
-before registration" a trace, not a prose claim.
+``tests/test_crosssf_gate.py`` machine-checks that every query
+registered from round 10 on has a passing row at both SFs — making the
+standing invariant "every new wave gates at BOTH SFs before
+registration" a trace, not a prose claim.
 
 Usage:
     PYSPARK_SUBMIT_ARGS="--driver-memory 24g pyspark-shell" \\

@@ -18,7 +18,7 @@ SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 def main() -> None:
     from safeascent_spark.session import get_spark
     import __spark_entry__ as entry
-    spark = get_spark("r13-sweep")
+    spark = get_spark("sweep")
     qs = entry.queries()
     out, errs = {}, {}
     for name in sorted(qs):
