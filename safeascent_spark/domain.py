@@ -21,10 +21,12 @@ hash-compares results at sf0.01.
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import re
 import weakref
+from typing import Callable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,22 +60,24 @@ _JDF_ATTR = "_safeascent_persisted_jdfs"
 
 
 def _release_session_frames(jdfs: list) -> None:
-    """``weakref.finalize`` callback: best-effort unpersist of every
-    persisted frame a dead session registered via ``persisted()``, so
-    CacheManager entries and storage blocks return to the SHARED
-    SparkContext immediately instead of lingering forever (``.cache()``
-    registrations are never ContextCleaner-collected) — a storage-memory
-    leak for long-lived drivers that churn ``newSession()`` clones
-    (ADVICE r4).  The list holds only py4j JVM handles, which do NOT
-    reference the Python session — the finalize args therefore cannot
-    keep the session immortal (the documented ``weakref.finalize``
-    trap).  After the callback runs, the handles themselves are released,
-    letting ContextCleaner collect localCheckpoint RDD blocks too.
-    Exceptions are swallowed: if the whole context is gone, the blocks
-    are gone with it."""
+    """Free the storage of every frame in ``jdfs`` (py4j Dataset handles).
+
+    ``Dataset.unpersist`` frees a ``.cache()`` frame, but does nothing on a
+    ``localCheckpoint`` frame: its blocks belong to the RDD under the
+    frame's ``LogicalRDD`` plan, so that RDD is unpersisted too.  Runs as
+    the ``weakref.finalize`` callback of a collected session, so storage
+    returns to the SHARED SparkContext at once instead of lingering for
+    the context's lifetime — a leak for long-lived drivers that churn
+    ``newSession()`` clones (ADVICE r4).  The list holds only JVM handles,
+    which do NOT reference the Python session, so the finalize args cannot
+    keep the session alive.  Exceptions are swallowed: if the whole
+    context is gone, the blocks are gone with it."""
     for j in jdfs:
         try:
             j.unpersist(False)
+            plan = j.queryExecution().logical()
+            if plan.nodeName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
         except Exception:
             pass
 
@@ -93,8 +97,8 @@ def session_cache(spark: SparkSession, ns: str) -> dict:
     key keeps the key alive forever (the documented weakref caveat) — the
     session would never be collected.  As a session attribute, session →
     memo → DataFrame → session is a pure internal cycle that CPython's
-    GC collects as soon as external references drop; the ``persisted()``
-    finalizer then frees the JVM-side storage."""
+    GC collects as soon as external references drop; the finalizer then
+    frees the storage of every frame ``session_memo`` registered."""
     per = getattr(spark, _MEMO_ATTR, None)
     if per is None:
         per = {}
@@ -105,14 +109,61 @@ def session_cache(spark: SparkSession, ns: str) -> dict:
     return per.setdefault(ns, {})
 
 
-def persisted(spark: SparkSession, df: DataFrame) -> DataFrame:
-    """Register a ``.cache()``'d / ``localCheckpoint``'ed frame for
-    unpersist-on-session-GC (see ``_release_session_frames``).  Builders
-    that store persisted frames in ``session_cache`` must route them
-    through here.  Returns ``df`` unchanged."""
-    session_cache(spark, "_persist_registry")  # ensure finalizer exists
-    getattr(spark, _JDF_ATTR).append(df._jdf)
-    return df
+def release_registry(spark: SparkSession) -> list:
+    """The frames this session releases when it is collected."""
+    session_cache(spark, "_release")  # creates the registry + finalizer
+    return getattr(spark, _JDF_ATTR)
+
+
+def session_memo(spark: SparkSession, ns: str, key, build: Callable):
+    """``build()`` memoized per (session, ``ns``, ``key``).  Every
+    DataFrame in the result (a frame or a tuple) is a stored frame —
+    ``.cache()``d or checkpointed — and is registered for release when
+    the session is collected."""
+    cache = session_cache(spark, ns)
+    if key not in cache:
+        val = build()
+        release_registry(spark).extend(
+            f._jdf for f in (val if isinstance(val, tuple) else (val,))
+            if isinstance(f, DataFrame))
+        cache[key] = val
+    return cache[key]
+
+
+# name -> raw (pre-checkpoint) builder of every ``checkpointed`` frame;
+# ``planprobes.all_probes()`` is generated from it.
+CHECKPOINTS: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+
+
+def checkpointed(name: str, scope: str = "session"):
+    """Decorate a ``(spark, sf_dir) -> DataFrame`` builder of a raw
+    pipeline; a call returns ``raw.localCheckpoint(eager=True)``.
+
+    * ``scope="session"``: memoized per (session, sf_dir) and released
+      when the session is collected — for dimensions reused across
+      queries (the frozen session-memoization policy).
+    * ``scope="invocation"``: built fresh on every call and never
+      registered; ContextCleaner frees it after the JVM has collected
+      the query's frames.  Registering it would pin one copy per call
+      until session GC.
+
+    The undecorated builder is recorded in ``CHECKPOINTS[name]``: the
+    plan-probe gate audits the pipeline the checkpoint hides."""
+    if scope not in ("session", "invocation"):
+        raise ValueError(f"checkpoint scope {scope!r}")
+
+    def deco(build):
+        CHECKPOINTS[name] = build
+
+        @functools.wraps(build)
+        def frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+            def ck():
+                return build(spark, sf_dir).localCheckpoint(eager=True)
+            if scope == "invocation":
+                return ck()
+            return session_memo(spark, name, sf_dir, ck)
+        return frame
+    return deco
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -245,7 +296,7 @@ def _estimate_scan_partitions(spark: SparkSession, df: DataFrame,
 # Spark builders
 # ---------------------------------------------------------------------------
 
-def _memo_df(fn):
+def memo_plan(fn):
     """Memoize a (spark, sf_dir) -> DataFrame builder per session.
 
     Building these plans costs hundreds of py4j round-trips (the CASE
@@ -273,7 +324,7 @@ def _mod_case(key, values: list, scale: int = 1):
     return expr
 
 
-@_memo_df
+@memo_plan
 def routes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Routes from customer; coords live on `locations` (J1 inheritance)."""
     c = load_table(spark, sf_dir, "customer")
@@ -288,7 +339,7 @@ def routes_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memo_df
+@memo_plan
 def locations_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Location dimension derived from the route->location key space."""
     r = routes_df(spark, sf_dir)
@@ -304,7 +355,7 @@ def locations_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memo_df
+@memo_plan
 def accidents_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Accidents from supplier (the broadcast build side)."""
     s = load_table(spark, sf_dir, "supplier")
@@ -326,7 +377,7 @@ def accidents_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memo_df
+@memo_plan
 def weather_long_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long-form weather: one row per (wbucket, day_offset 0..6).
 
@@ -357,7 +408,7 @@ def weather_long_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memo_df
+@memo_plan
 def archive_stats_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-bucket long-run weather stats (mean, population std per factor).
 

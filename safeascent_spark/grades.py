@@ -81,17 +81,16 @@ def domain_grade_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized grade dimension over the domain's two grade sources
     (routes + accidents).  The distinct-collect runs once per (session, sf)."""
     from . import domain
-    _DIM_CACHE = domain.session_cache(spark, "grade_dim")
-    key = sf_dir
-    if key not in _DIM_CACHE:
+
+    def build():
         r = domain.routes_df(spark, sf_dir).select("grade")
         a = domain.accidents_df(spark, sf_dir).select("grade")
         distinct = [x[0] for x in r.union(a).distinct().collect()
                     if x[0] is not None]
         rows = [(g, py_parse_grade(g)) for g in sorted(distinct)]
-        _DIM_CACHE[key] = domain.persisted(spark, spark.createDataFrame(
-            rows, "grade string, difficulty double").cache())
-    return _DIM_CACHE[key]
+        return spark.createDataFrame(
+            rows, "grade string, difficulty double").cache()
+    return domain.session_memo(spark, "grade_dim", sf_dir, build)
 
 
 def grade_difficulty_join(df: DataFrame, grade_col: str, out_col: str,

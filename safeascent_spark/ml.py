@@ -68,18 +68,15 @@ def _training_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     join-back, and again by every nested caller: eval_brier_decomposition,
     ml_risk_model_cv, ml_calibration).  A per-invocation ``.cache()``
     with no unpersist pinned a NEW copy per call for the session
-    lifetime (ADVICE r10); the session-scoped memo + ``persisted``
-    registration (the ``domain.load_table`` device) keeps exactly one
+    lifetime (ADVICE r10); ``domain.session_memo`` keeps exactly one
     cached route-grain copy per (session, sf) and unpersists it when
     the session is collected."""
-    cache = domain.session_cache(spark, "ml_training_frame")
-    if sf_dir not in cache:
+    def build():
         feats = _route_features(spark, sf_dir)
         labels = scoring.risk_scores_df(spark, sf_dir).select(
             "route_id", "risk_score")
-        cache[sf_dir] = domain.persisted(
-            spark, feats.join(labels, "route_id").cache())
-    return cache[sf_dir]
+        return feats.join(labels, "route_id").cache()
+    return domain.session_memo(spark, "ml_training_frame", sf_dir, build)
 
 
 def q_ml_risk_model_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -917,7 +914,7 @@ def q_ann_ivf_pq(spark: SparkSession, sf_dir: str,
     # the final recall join; un-materialized, the whole IVF-PQ candidate
     # sweep + re-rank pipeline executed twice.  topk x N_QUERIES rows —
     # bounded at any corpus size.
-    res = domain.persisted(spark, res.localCheckpoint(eager=True))
+    res = res.localCheckpoint(eager=True)
     brute = cosine_topk_df(spark, sf_dir, topk).select(
         "query_id", "neighbor_id")
     overlap = (res.select("query_id", "neighbor_id")
@@ -943,7 +940,7 @@ def q_ann_ivf_pq_certified(spark: SparkSession, sf_dir: str,
         F.min("recall_at_k").alias("recall"))
     # r12: per_q feeds the mean gate and the certification projection —
     # N_QUERIES rows, checkpointed so the upstream runs once.
-    per_q = domain.persisted(spark, per_q.localCheckpoint(eager=True))
+    per_q = per_q.localCheckpoint(eager=True)
     mean_ok = per_q.agg(
         (F.avg("recall") >= F.lit(IVFPQ_RECALL_MEAN)).alias("mean_recall_ok"))
     return (per_q.crossJoin(F.broadcast(mean_ok))

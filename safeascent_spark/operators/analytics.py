@@ -3016,8 +3016,9 @@ ORDER BY event_type"""
 CONC_GAP_NS = 3_600 * 1_000_000_000   # streaming SESSION_GAP = "1 hour"
 
 
-def _peak_sessions_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint session boundary pipeline — plan-probe surface."""
+@domain.checkpointed("peak_session_bounds", scope="invocation")
+def _peak_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(start_ns, end_ns) per 1h-gap session island."""
     e = domain.load_table(spark, sf_dir, "events") \
               .select("user_id", "ts")
     w = Window.partitionBy("user_id").orderBy("ts")
@@ -3043,8 +3044,7 @@ def q_events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # legs x banded_cumsum's two derivation branches, plus the starts
     # leg).  The union is an explode so the boundary stream is one pass
     # over the materialized frame.
-    sess = domain.persisted(
-        spark, _peak_sessions_raw(spark, sf_dir).localCheckpoint(eager=True))
+    sess = _peak_sessions(spark, sf_dir)
     pts = (sess.select(F.explode(F.array(
                    F.struct(F.col("start_ns").alias("tns"),
                             F.lit(1).cast("long").alias("d")),

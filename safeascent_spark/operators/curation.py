@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import domain
 from .text import (STOPWORDS, TOKENS_CTE, VOCAB_CTE, docs_df, tokens_df,
                    vocab_df, PII_PATTERNS)
 
@@ -218,8 +219,9 @@ DSIR_P = 1_000_000_007
 DSIR_TARGET_LANG = "en"
 
 
-def _dsir_doc_bucket_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint (doc, lang, bucket, count) pipeline — probe surface."""
+@domain.checkpointed("dsir_doc_bucket", scope="invocation")
+def _dsir_doc_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc, lang, bucket, count) token-stream proxy."""
     t = tokens_df(spark, sf_dir)
     v = vocab_df(spark, sf_dir).withColumn(
         "bucket", F.expr(f"pmod(wid * {DSIR_KNUTH}L, {DSIR_P}L) "
@@ -238,10 +240,7 @@ def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # previously re-derived the full tokenize+join subtree (the plan
     # snapshot showed 80 parquet scans).  The proxy drops word strings
     # and is bounded by |docs| x min(|buckets|, doc length).
-    from .. import domain
-    db = domain.persisted(
-        spark,
-        _dsir_doc_bucket_raw(spark, sf_dir).localCheckpoint(eager=True))
+    db = _dsir_doc_bucket(spark, sf_dir)
     tgt = (db.filter(F.col("lang") == DSIR_TARGET_LANG)
              .groupBy("bucket").agg(F.sum("c").alias("c_t")))
     raw = db.groupBy("bucket").agg(F.sum("c").alias("c_s"))

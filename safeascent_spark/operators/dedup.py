@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import domain
 from . import text as T
 
 HASH_P = 1_000_000_007
@@ -72,12 +73,8 @@ FROM documents GROUP BY md5(text) ORDER BY keep_doc_id"""
 def shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-memoized + Spark-cached shingle table (several dedup queries
     share it; the vocabulary distinct-collect runs once per session/sf)."""
-    from .. import domain
-    cache = domain.session_cache(spark, "shingles")
-    if sf_dir not in cache:
-        cache[sf_dir] = domain.persisted(
-            spark, shingles_df(spark, sf_dir).cache())
-    return cache[sf_dir]
+    return domain.session_memo(spark, "shingles", sf_dir,
+                               lambda: shingles_df(spark, sf_dir).cache())
 
 
 def shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,7 +554,6 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``dedup_exact``), and the 1 contaminated doc is already filtered
     upstream, so the stage-5 anti-join runs against a non-empty side.
     """
-    from .. import domain as _dom
     # r12 (guide §3.3): each stage's id set feeds BOTH its own stage
     # count and every later stage's semi/anti join, so without
     # materialization the funnel recomputes a triangular prefix chain
@@ -565,19 +561,18 @@ def q_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the committed snapshot).  Checkpoint the thin single-column
     # survivor sets once each; the last set is consumed once and needs
     # none.
-    def _ck(df):
-        return _dom.persisted(spark, df.localCheckpoint(eager=True))
-
     d = T.docs_df(spark, sf_dir)
-    quality_ids = _ck(T.q_quality_score(spark, sf_dir)
-                      .where(F.col("quality_u") >= 500000).select("doc_id"))
-    exact_ids = _ck(d.join(quality_ids, "doc_id", "left_semi")
-                     .groupBy(F.md5(F.col("text")))
-                     .agg(F.min("doc_id").alias("doc_id"))
-                     .select("doc_id"))
+    quality_ids = (T.q_quality_score(spark, sf_dir)
+                   .where(F.col("quality_u") >= 500000).select("doc_id")
+                   .localCheckpoint(eager=True))
+    exact_ids = (d.join(quality_ids, "doc_id", "left_semi")
+                  .groupBy(F.md5(F.col("text")))
+                  .agg(F.min("doc_id").alias("doc_id"))
+                  .select("doc_id").localCheckpoint(eager=True))
     near_keep = (q_dedup_clusters(spark, sf_dir)
                  .where(F.col("is_kept")).select("doc_id"))
-    near_ids = _ck(exact_ids.join(near_keep, "doc_id", "left_semi"))
+    near_ids = exact_ids.join(near_keep, "doc_id", "left_semi") \
+        .localCheckpoint(eager=True)
     contaminated = (q_text_decontamination(spark, sf_dir)
                     .where(F.col("contaminated")).select("doc_id"))
     clean_ids = near_ids.join(contaminated, "doc_id", "left_anti")
@@ -1203,12 +1198,9 @@ WITH {_sql_winnow_cte().strip()}
 SELECT doc_id, pos, fp FROM fps ORDER BY doc_id, pos"""
 
 
-def _winnow_fp_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint distinct (doc_id, fp) fingerprint frame.  Exposed
-    separately so the plan-probe gate (tests/test_plans.py, VERDICT
-    r11 item 3) can audit the tokenize+winnow upstream the committed
-    ``docs/plan_winnowing_pairs.txt`` snapshot cannot see behind the
-    checkpoint."""
+@domain.checkpointed("winnow_fp_frame")
+def _winnow_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (doc_id, fp) fingerprint frame."""
     return _winnow_fp_df(spark, sf_dir).select("doc_id", "fp").distinct()
 
 
@@ -1223,16 +1215,9 @@ def q_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute class as the r11 pHash fix (VERDICT r10 items 1/6).  The
     frame is (doc_id, fp) — two int64s per fingerprint — but it is
     corpus-PROPORTIONAL, so a per-invocation checkpoint would pin a
-    fresh copy per call until session GC (ADVICE r11); it is memoized
-    per (session, sf_dir) via ``domain.session_cache`` instead, the
-    ``ml._training_frame`` house pattern."""
-    from .. import domain as _domain
-    cache = _domain.session_cache(spark, "winnow_fp_ckpt")
-    if sf_dir not in cache:
-        cache[sf_dir] = _domain.persisted(
-            spark,
-            _winnow_fp_raw(spark, sf_dir).localCheckpoint(eager=True))
-    fp = cache[sf_dir]
+    fresh copy per call until session GC (ADVICE r11); it is
+    session-scoped instead."""
+    fp = _winnow_fp(spark, sf_dir)
     hot = (fp.groupBy("fp").agg(F.count(F.lit(1)).alias("df"))
              .filter(F.col("df") > MAX_SHINGLE_DF)
              .select("fp"))

@@ -57,14 +57,14 @@ def _per_and_tot(spark: SparkSession, sf_dir: str):
     that builds it happens inside the timed invocation.  Checkpointed
     frames carry no size stats, so downstream grid joins carry explicit
     broadcast hints (the isotonic lesson, VERDICT r11)."""
-    per = domain.persisted(
-        spark, _score_grid_raw(spark, sf_dir).localCheckpoint(eager=True))
+    per = _score_grid(spark, sf_dir)
     tot = per.groupBy("s").agg(F.sum("n_ts").cast("bigint").alias("n_s"))
     return per, tot
 
 
-def _score_grid_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint (event_type, s) grid pipeline — plan-probe surface."""
+@domain.checkpointed("eval_score_grid", scope="invocation")
+def _score_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(event_type, s) -> n_ts distinct-score grid."""
     return (_scores(spark, sf_dir)
             .groupBy("event_type", "s")
             .agg(F.count(F.lit(1)).cast("bigint").alias("n_ts")))
@@ -586,13 +586,12 @@ ORDER BY bin"""
 ISO_BINS = 32
 
 
-def _iso_bin_frame_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint bin frame: ONE corpus-grain aggregate of the full
-    scoring label pipeline down to <= ISO_BINS rows.  Exposed
-    separately so the plan-probe gate (tests/test_plans.py, VERDICT
-    r11 item 3) can audit the upstream plan the committed
-    ``docs/plan_ml_isotonic_calibration.txt`` snapshot cannot see
-    behind the checkpoint."""
+@domain.checkpointed("iso_bin_frame")
+def _iso_bin_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bin frame: ONE corpus-grain aggregate of the full scoring label
+    pipeline down to <= ISO_BINS rows.  The frame is <= 32 rows, but its
+    upstream is the FULL scoring label pipeline — session-scoped so
+    repeated calls don't re-run the corpus pass (ADVICE r11)."""
     from .. import ml as ML
     m = ML.q_ml_risk_model(spark, sf_dir).select(
         "risk_score", "predicted_risk")
@@ -612,17 +611,7 @@ def _iso_bin_frame_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ml_isotonic_calibration(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    from .. import domain
-    # the bin frame is <= 32 rows, but its upstream is the FULL scoring
-    # label pipeline — memoized per (session, sf_dir) so repeated calls
-    # don't re-run the corpus pass and don't accumulate persist-registry
-    # pins (ADVICE r11)
-    cache = domain.session_cache(spark, "iso_bin_ckpt")
-    if sf_dir not in cache:
-        cache[sf_dir] = domain.persisted(
-            spark,
-            _iso_bin_frame_raw(spark, sf_dir).localCheckpoint(eager=True))
-    b = cache[sf_dir]
+    b = _iso_bin_frame(spark, sf_dir)
     jf = b.select(F.col("bin").alias("jb"))
     kf = b.select(F.col("bin").alias("kb"))
     mf = b.select(F.col("bin").alias("mb"), "sa",

@@ -291,15 +291,13 @@ def q_search_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairwise int8 dot products, corpus-size-independent row counts) whose
     # BUILD is the corpus sweep.  Admitted into the session-dim memoization
     # policy (OPTIMIZATION_r12.md "Session-memoization policy"): memoized
-    # per (session, sf_dir) like the wsim dim, routed through the persist
-    # registry so session GC releases the storage.  The MMR selection loop
-    # below — the query's answer — is recomputed on every invocation.
-    cache = domain.session_cache(spark, "mmr_base")
-    if sf_dir not in cache:
+    # per (session, sf_dir) like the wsim dim; session GC releases the
+    # storage.  The MMR selection loop below — the query's answer — is
+    # recomputed on every invocation.
+    def build():
         c, p = _mmr_base(spark, sf_dir)
-        cache[sf_dir] = (domain.persisted(spark, c.cache()),
-                         domain.persisted(spark, p.cache()))
-    cand, pair_sim = cache[sf_dir]
+        return c.cache(), p.cache()
+    cand, pair_sim = domain.session_memo(spark, "mmr_base", sf_dir, build)
     selected = None   # (query_id, vec_id, mmr_rank, score3)
     remaining = cand
     for k in range(1, MMR_K + 1):
@@ -325,18 +323,13 @@ def q_search_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the plan — and the executed work — grew quadratically in MMR_K
         # (the same lineage blowup the CC star loop fixed); the values are
         # unchanged, the rank window's cand_id tiebreak is total.
-        # r13 (ADVICE r12): the per-round checkpoint rides the persist
-        # registry too — each invocation otherwise pinned MMR_K block sets
-        # until session GC.
-        pick = domain.persisted(
-            spark,
-            scored.withColumn("rn", F.row_number().over(w))
-                  .filter(F.col("rn") == 1)
-                  .select("query_id",
-                          F.col("cand_id").alias("vec_id"),
-                          F.lit(k).alias("mmr_rank"),
-                          "score3")
-                  .localCheckpoint(eager=False))
+        pick = (scored.withColumn("rn", F.row_number().over(w))
+                      .filter(F.col("rn") == 1)
+                      .select("query_id",
+                              F.col("cand_id").alias("vec_id"),
+                              F.lit(k).alias("mmr_rank"),
+                              "score3")
+                      .localCheckpoint(eager=False))
         selected = pick if selected is None else selected.unionByName(pick)
         remaining = remaining.join(
             pick.select("query_id", F.col("vec_id").alias("cand_id")),

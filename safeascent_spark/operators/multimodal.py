@@ -630,8 +630,9 @@ def extract_png_ahash(media: DataFrame) -> DataFrame:
     return media.select("media_id", "payload").mapInPandas(run, PHASH_SCHEMA)
 
 
+@domain.checkpointed("phash_hash_frame")
 def phash_hashes_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Decoded aHash frame, materialized ONCE via ``localCheckpoint``.
+    """Decoded aHash frame, checkpointed ONCE per (session, sf_dir).
 
     Every pair-mining consumer (pairs / knn / clusters) self-joins the
     hash table: without a materialization boundary each plan branch
@@ -642,18 +643,11 @@ def phash_hashes_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     consumption class as the r10 ``q_ml_risk_model`` fix).  The hash
     frame is media_id + four 16-bit bands — tiny at any corpus size —
     so checkpointing it trades a negligible store for decoding the
-    corpus exactly once.  ``persisted`` registers the blocks for
-    unpersist-on-session-GC (the ADVICE r10 cache-leak discipline);
-    the checkpoint is memoized per (session, sf_dir) via
-    ``domain.session_cache`` (ADVICE r11) so the three pair-mining
-    consumers share ONE decode even across separate invocations in the
-    same session, instead of pinning a fresh copy per call."""
-    cache = domain.session_cache(spark, "phash_hashes_ckpt")
-    if sf_dir not in cache:
-        df = extract_png_ahash(png_media_grad_df(spark, sf_dir))
-        cache[sf_dir] = domain.persisted(
-            spark, df.localCheckpoint(eager=True))
-    return cache[sf_dir]
+    corpus exactly once.  Session scope (ADVICE r11): the three
+    pair-mining consumers share ONE decode even across separate
+    invocations in the same session, instead of pinning a fresh copy
+    per call, and session GC releases the blocks."""
+    return extract_png_ahash(png_media_grad_df(spark, sf_dir))
 
 
 def q_multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:

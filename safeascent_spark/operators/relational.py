@@ -940,8 +940,9 @@ def _geo_knn_routes_acc(spark: SparkSession, sf_dir: str):
     return routes, acc
 
 
-def _geo_knn_fine_done_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint certified fine-leg pipeline — plan-probe surface.
+@domain.checkpointed("geo_knn_fine_done", scope="invocation")
+def _geo_knn_fine_done(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Certified fine-leg pipeline.
 
     phase 1: fine grid; a route is CERTIFIED when it has K fine
     candidates and the K-th one's ROUNDED distance sits strictly
@@ -982,9 +983,7 @@ def q_geo_knn_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # whole fine grid join + rank window ran twice.  The frame is K rows
     # per certified route (thin ids + one double), so the checkpoint is
     # small at any corpus size.
-    done = domain.persisted(
-        spark,
-        _geo_knn_fine_done_raw(spark, sf_dir).localCheckpoint(eager=True))
+    done = _geo_knn_fine_done(spark, sf_dir)
     certified = done.select("route_id").distinct()
     # phase 2: only uncertified routes ride the coarse 300 km grid
     rest = routes.join(certified, "route_id", "left_anti")

@@ -601,8 +601,9 @@ def _idot(a, b):
                        F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
-def _semdedup_cell_frame_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint SemDeDup cell frame pipeline — plan-probe surface."""
+@domain.checkpointed("semdedup_cell_frame", scope="invocation")
+def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, cell, qvec, n2): the signed + quantized corpus."""
     corpus = corpus_with_twins_df(spark, sf_dir)
     cells0 = (band_signatures_df(corpus)
               .filter(F.col("band") == 0)
@@ -633,9 +634,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twin union + SRP signatures + quantization; with one checkpoint
     # the self-join's sides are identical subtrees, so the cell shuffle
     # itself is computed once and reused.
-    m = domain.persisted(
-        spark,
-        _semdedup_cell_frame_raw(spark, sf_dir).localCheckpoint(eager=True))
+    m = _semdedup_cells(spark, sf_dir)
     cells = m.select("vec_id", "cell")
     a = m.select(F.col("vec_id").alias("va"), "cell",
                  F.col("qvec").alias("qa"), F.col("n2").alias("na2"))
@@ -2197,13 +2196,12 @@ ORDER BY source"""
 MRL_DIMS = [8, 16, 32, DIM]
 
 
-def _mrl_ranked_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint ranked frame: top-K per (dim, query) by
-    prefix-cosine over one broadcast corpus x probes pass.  Exposed
-    separately so the plan-probe gate (tests/test_plans.py, VERDICT
-    r11 item 3) can audit the upstream plan the committed
-    ``docs/plan_embedding_matryoshka_recall.txt`` snapshot cannot see
-    behind the checkpoint."""
+@domain.checkpointed("mrl_ranked_frame")
+def _mrl_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ranked frame: top-K per (dim, query) by prefix-cosine over one
+    broadcast corpus x probes pass.  (#queries x #dims x TOP_K) rows —
+    query-set-proportional, so it is session-scoped rather than pinned
+    afresh on every invocation (ADVICE r11)."""
     e = quantized_df(spark, sf_dir)
     q = (e.filter(F.col("vec_id") < N_QUERIES)
           .select(F.col("vec_id").alias("query_id"),
@@ -2237,15 +2235,7 @@ def _mrl_ranked_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_embedding_matryoshka_recall(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    # (#queries x #dims x TOP_K) rows — query-set-proportional, so the
-    # checkpoint is memoized per (session, sf_dir) rather than pinned
-    # afresh on every invocation (ADVICE r11)
-    cache = domain.session_cache(spark, "mrl_ranked_ckpt")
-    if sf_dir not in cache:
-        cache[sf_dir] = domain.persisted(
-            spark,
-            _mrl_ranked_raw(spark, sf_dir).localCheckpoint(eager=True))
-    ranked = cache[sf_dir]
+    ranked = _mrl_ranked(spark, sf_dir)
     truth = (ranked.filter(F.col("dim") == DIM)
                    .select(F.col("query_id").alias("t_query"),
                            F.col("vec_id").alias("t_vec")))
@@ -2393,19 +2383,39 @@ def _ivf_inc_to_array(stats: DataFrame) -> DataFrame:
                      lambda s: s["c"]).alias("cvec")))
 
 
-def _ivf_inc_assign_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-checkpoint base-assignment pipeline (seed-shard aggregate ->
-    centroid assembly -> argmin window), exposed for the plan-probe
-    gate: the memoized state hides these plans behind checkpoints."""
-    K, M = IVF_INC_CELLS, IVF_INC_FRESH_MOD
-    e = quantized_df(spark, sf_dir).select(
-        "vec_id",
-        F.transform("qvec", lambda x: x + 127).alias("v"))
-    base = e.filter(F.col("vec_id") % M != 7)
-    c0 = _ivf_inc_cell_means(
-        base.select((F.col("vec_id") % K).alias("shard"), "v"),
+@domain.memo_plan
+def _ivf_inc_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, v) offset-int8 corpus; one plan per session, shared by
+    every frame of the index state."""
+    return quantized_df(spark, sf_dir).select(
+        "vec_id", F.transform("qvec", lambda x: x + 127).alias("v"))
+
+
+def _ivf_inc_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _ivf_inc_vectors(spark, sf_dir).filter(
+        F.col("vec_id") % IVF_INC_FRESH_MOD != 7)
+
+
+@domain.checkpointed("ivf_inc_seed_frame")
+def _ivf_inc_seed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Seed centroid long form: element-wise mean of the vec_id % K
+    shard of the base corpus."""
+    base = _ivf_inc_base(spark, sf_dir)
+    return _ivf_inc_cell_means(
+        base.select((F.col("vec_id") % IVF_INC_CELLS).alias("shard"), "v"),
         "shard").select("cell", "i", F.expr("sx div n").alias("c"))
-    return _ivf_inc_assign(base, _ivf_inc_to_array(c0), "cell0")
+
+
+@domain.memo_plan
+def _ivf_inc_cent0(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _ivf_inc_to_array(_ivf_inc_seed(spark, sf_dir))
+
+
+@domain.checkpointed("ivf_inc_assign_frame")
+def _ivf_inc_base_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Base corpus assigned to the seed centroids."""
+    return _ivf_inc_assign(_ivf_inc_base(spark, sf_dir),
+                           _ivf_inc_cent0(spark, sf_dir), "cell0")
 
 
 def _ivf_inc_state(spark: SparkSession, sf_dir: str) -> dict:
@@ -2415,29 +2425,18 @@ def _ivf_inc_state(spark: SparkSession, sf_dir: str) -> dict:
     frame feeds FOUR plan branches and each assignment two, so without
     checkpoints every branch re-runs the corpus aggregate (the r11
     pHash/winnowing redundant-recompute class); the assignment frames
-    are corpus-proportional, so the checkpoints route through
-    ``domain.session_cache`` (ADVICE r11).  At a real deployment the
-    assignment table IS the IVF index's persisted state — pinning it
-    is the semantics, not an optimization."""
-    K = IVF_INC_CELLS
-    cache = domain.session_cache(spark, "ivf_inc_state")
-    if sf_dir not in cache:
-        def ck(df):
-            return domain.persisted(spark, df.localCheckpoint(eager=True))
+    are corpus-proportional, so every checkpoint is session-scoped
+    (ADVICE r11).  At a real deployment the assignment table IS the IVF
+    index's persisted state — pinning it is the semantics, not an
+    optimization."""
+    c0 = _ivf_inc_seed(spark, sf_dir)
+    abase = _ivf_inc_base_cells(spark, sf_dir)
 
-        M = IVF_INC_FRESH_MOD
-        e = quantized_df(spark, sf_dir).select(
-            "vec_id",
-            F.transform("qvec", lambda x: x + 127).alias("v"))
-        base = e.filter(F.col("vec_id") % M != 7)
-        fresh = e.filter(F.col("vec_id") % M == 7)
-        # seed centroids: element-wise mean of the vec_id % K shard
-        c0 = ck(_ivf_inc_cell_means(
-            base.select((F.col("vec_id") % K).alias("shard"), "v"),
-            "shard").select("cell", "i", F.expr("sx div n").alias("c")))
-        cent0 = _ivf_inc_to_array(c0)
-        abase = ck(_ivf_inc_assign(base, cent0, "cell0"))
-        afresh = ck(_ivf_inc_assign(fresh, cent0, "cell0"))
+    def build():
+        fresh = _ivf_inc_vectors(spark, sf_dir).filter(
+            F.col("vec_id") % IVF_INC_FRESH_MOD == 7)
+        afresh = _ivf_inc_assign(fresh, _ivf_inc_cent0(spark, sf_dir),
+                                 "cell0").localCheckpoint(eager=True)
         # merge the fresh batch's partials into the index stats (the
         # IVM step); a cell with no members keeps its seed centroid
         sb = _ivf_inc_cell_means(abase, "cell0")
@@ -2451,16 +2450,16 @@ def _ivf_inc_state(spark: SparkSession, sf_dir: str) -> dict:
                             .alias("sx"),
                             (F.col("n") + F.coalesce("fn", F.lit(0)))
                             .alias("n")))
-        c1 = ck(c0.withColumnRenamed("c", "c0")
-                  .join(F.broadcast(
-                      merged.select("cell", "i",
-                                    F.expr("sx div n").alias("c1"))),
-                        ["cell", "i"], "left")
-                  .select("cell", "i",
-                          F.coalesce("c1", "c0").alias("c")))
-        cache[sf_dir] = {"c0": c0, "abase": abase, "afresh": afresh,
-                         "c1": c1}
-    return cache[sf_dir]
+        c1 = (c0.withColumnRenamed("c", "c0")
+                .join(F.broadcast(
+                    merged.select("cell", "i",
+                                  F.expr("sx div n").alias("c1"))),
+                      ["cell", "i"], "left")
+                .select("cell", "i", F.coalesce("c1", "c0").alias("c"))
+                .localCheckpoint(eager=True))
+        return afresh, c1
+    afresh, c1 = domain.session_memo(spark, "ivf_inc_state", sf_dir, build)
+    return {"c0": c0, "abase": abase, "afresh": afresh, "c1": c1}
 
 
 def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1494,49 +1494,43 @@ BM25_B = 0.75
 BM25_TOP_K = 20
 
 
-def _bm25_corpus_stats(spark: SparkSession, sf_dir: str) -> tuple[int, float]:
-    """(N docs, avg doc length) — one map-side-combined corpus aggregate.
-
-    Bounded driver scalar (2 numbers), same convention as
-    q_text_unigram_lm's corpus token count.  avgdl is the exact IEEE
-    quotient of two BIGINTs; the oracle inlines the identical literal.
-    """
-    d = docs_df(spark, sf_dir)
-    toks = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    row = (d.select(F.size(toks).alias("dl"))
-            .agg(F.count(F.lit(1)).alias("n_docs"),
-                 F.sum("dl").alias("n_tokens"))
-            .collect()[0])
-    return int(row["n_docs"]), int(row["n_tokens"]) / int(row["n_docs"])
-
-
-def _bm25_base_raw(spark: SparkSession, sf_dir: str,
-                   terms: list[str]) -> DataFrame:
-    """Pre-checkpoint (doc_id, dl, qw) pipeline — plan-probe surface."""
+def _bm25_tokens(spark: SparkSession, sf_dir: str,
+                 terms: list[str]) -> DataFrame:
+    """(doc_id, dl, qw): doc length + the doc's tokens among ``terms``."""
     d = docs_df(spark, sf_dir)
     toks = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
     return d.select("doc_id", F.size(toks).alias("dl"),
                     F.filter(toks, lambda x: x.isin(terms)).alias("qw"))
 
 
-def _bm25_base(spark: SparkSession, sf_dir: str,
-               terms: list[str]) -> tuple[DataFrame, int, float]:
-    """One tokenize pass serving BOTH the corpus stats and the posting list.
+@domain.checkpointed("bm25_topk_base_frame", scope="invocation")
+def _bm25_topk_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _bm25_tokens(spark, sf_dir, BM25_TERMS)
+
+
+@domain.checkpointed("bm25_base_frame", scope="invocation")
+def _bm25_multi_base(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _bm25_tokens(spark, sf_dir, BM25_ALL_TERMS)
+
+
+def _bm25_stats(base: DataFrame) -> tuple[int, float]:
+    """(N docs, avgdl) — bounded driver scalars read from the checkpointed
+    base, so one tokenize pass serves BOTH the corpus stats and the
+    posting list.  avgdl is the exact IEEE quotient of two BIGINTs; the
+    oracle inlines the identical literal.
 
     r13 (guide §2, VERDICT r12 item 6): the BM25 queries split every
-    document TWICE per invocation — once in the _bm25_corpus_stats collect
-    and again in the posting scan.  Materializing (doc_id, dl,
+    document TWICE per invocation — once in a corpus-stats collect and
+    again in the posting scan.  Materializing (doc_id, dl,
     query-term-filtered tokens) once per invocation (thin rows: two ints
     and a <=|terms|-element array — the text column never crosses the
     checkpoint) halves the corpus tokenize work; stats and posting both
     read the checkpoint.  Values are unchanged: dl/n_docs/avgdl are the
     same integers, and exploding the pre-filtered array yields exactly the
     post-explode-filtered token stream."""
-    base = _bm25_base_raw(spark, sf_dir, terms)
-    base = domain.persisted(spark, base.localCheckpoint(eager=True))
     row = base.agg(F.count(F.lit(1)).alias("n_docs"),
                    F.sum("dl").alias("n_tokens")).collect()[0]
-    return base, int(row["n_docs"]), int(row["n_tokens"]) / int(row["n_docs"])
+    return int(row["n_docs"]), int(row["n_tokens"]) / int(row["n_docs"])
 
 
 def q_text_bm25_topk(spark: SparkSession, sf_dir: str,
@@ -1554,7 +1548,8 @@ def q_text_bm25_topk(spark: SparkSession, sf_dir: str,
     expression tree, and the score is rounded to 6 before the hash — the
     q_text_unigram_lm convention.
     """
-    base, n_docs, avgdl = _bm25_base(spark, sf_dir, BM25_TERMS)
+    base = _bm25_topk_base(spark, sf_dir)
+    n_docs, avgdl = _bm25_stats(base)
     posting = (base.select("doc_id", "dl", F.explode("qw").alias("word"))
                    .groupBy("doc_id", "dl", "word")
                    .agg(F.count(F.lit(1)).cast("bigint").alias("tf")))
@@ -2078,13 +2073,14 @@ BM25_QUERIES = {
     1: ["hash", "row", "batch"],
     2: ["scan", "column", "join"],
 }
+BM25_ALL_TERMS = sorted({t for ts in BM25_QUERIES.values() for t in ts})
 BM25_MULTI_TOP_K = 10
 
 
 def q_text_bm25_multi(spark: SparkSession, sf_dir: str,
                       k: int = BM25_MULTI_TOP_K) -> DataFrame:
-    all_terms = sorted({t for ts in BM25_QUERIES.values() for t in ts})
-    base, n_docs, avgdl = _bm25_base(spark, sf_dir, all_terms)
+    base = _bm25_multi_base(spark, sf_dir)
+    n_docs, avgdl = _bm25_stats(base)
     qrows = [(qid, t) for qid, ts in sorted(BM25_QUERIES.items())
              for t in ts]
     qdim = spark.createDataFrame(qrows, "query_id int, word string")
@@ -2116,8 +2112,7 @@ def q_text_bm25_multi(spark: SparkSession, sf_dir: str,
 
 
 def sql_text_bm25_multi(k: int = BM25_MULTI_TOP_K) -> str:
-    all_terms = sorted({t for ts in BM25_QUERIES.values() for t in ts})
-    inlist = ", ".join(f"'{t}'" for t in all_terms)
+    inlist = ", ".join(f"'{t}'" for t in BM25_ALL_TERMS)
     qvals = ", ".join(f"({qid}, '{t}')"
                       for qid, ts in sorted(BM25_QUERIES.items())
                       for t in ts)

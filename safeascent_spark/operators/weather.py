@@ -93,23 +93,17 @@ def extreme_multiplier_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select("wbucket", mult.alias("extreme_multiplier"))
 
 
+@domain.checkpointed("wsim_frame")
 def weather_similarity_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session-memoized + Spark-cached pair-grain similarity dimension.
+    """Session-scoped pair-grain similarity dimension.
 
     Every scoring query broadcast-joins this table; it is bounded by
-    N_WBUCKETS^2 rows so caching it is free and saves the two-pass moment
-    aggregation per query."""
-    _WSIM_CACHE = domain.session_cache(spark, "wsim")
-    key = sf_dir
-    if key not in _WSIM_CACHE:
-        # localCheckpoint (not .cache()): truncating the lineage keeps the
-        # two-pass moment subtree out of every consumer's analyzed plan —
-        # consumers broadcast it explicitly, so the lost size estimate is
-        # irrelevant, and the dim is bounded by N_WBUCKETS^2 rows.
-        _WSIM_CACHE[key] = domain.persisted(
-            spark,
-            weather_similarity_df(spark, sf_dir).localCheckpoint(eager=True))
-    return _WSIM_CACHE[key]
+    N_WBUCKETS^2 rows so materializing it is free and saves the two-pass
+    moment aggregation per query.  A checkpoint (not ``.cache()``):
+    truncating the lineage keeps the two-pass moment subtree out of every
+    consumer's analyzed plan — consumers broadcast it explicitly, so the
+    lost size estimate is irrelevant."""
+    return weather_similarity_df(spark, sf_dir)
 
 
 def weather_similarity_df(spark: SparkSession, sf_dir: str,

@@ -10,20 +10,26 @@ carries no size statistics, so bounded non-equi joins plan as
 CartesianProduct unless explicitly hinted) proved the blind spot bites.
 
 Each probe is a context manager yielding the pre-checkpoint DataFrame of
-one such internal pipeline; sink probes create (and on exit remove) the
-scratch directory their writes need.  ``tools/plan_snapshot.py --probes``
-writes ``docs/probe_<name>.txt`` snapshots, and ``tests/test_plans.py``
-runs the cartesian/broadcast invariants over the LIVE probe plans.
+one such internal pipeline.  Every ``domain.checkpointed`` builder is a
+probe under its checkpoint name, so a new boundary is audited without
+being listed here; only the three sink probes, which create (and on exit
+remove) the scratch directory their writes need, are written out.
+``tools/plan_snapshot.py --probes`` writes ``docs/probe_<name>.txt``
+snapshots, and ``tests/test_plans.py`` runs the cartesian/broadcast
+invariants over the LIVE probe plans.
 """
 
 from __future__ import annotations
 
 import contextlib
+import importlib
+import pkgutil
 import shutil
 from typing import Callable, ContextManager, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from . import domain, operators, sinks
 
 
 def _plain(builder) -> Callable[[SparkSession, str], ContextManager]:
@@ -35,7 +41,6 @@ def _plain(builder) -> Callable[[SparkSession, str], ContextManager]:
 
 @contextlib.contextmanager
 def _s8_probe(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
-    from . import sinks
     tmp = sinks._sink_scratch_dir(spark, "probe_s8_")
     try:
         yield sinks._s8_serving_pipeline(spark, sf_dir, tmp)
@@ -45,7 +50,6 @@ def _s8_probe(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
 
 @contextlib.contextmanager
 def _s9_probe(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
-    from . import sinks
     tmp = sinks._sink_scratch_dir(spark, "probe_s9_")
     try:
         yield sinks._s9_survivor_pipeline(spark, sf_dir, tmp)
@@ -57,7 +61,6 @@ def _s9_probe(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
 @contextlib.contextmanager
 def _compaction_probe(spark: SparkSession,
                       sf_dir: str) -> Iterator[DataFrame]:
-    from . import sinks
     tmp = sinks._sink_scratch_dir(spark, "probe_s10c_")
     try:
         yield sinks._compaction_before_frame(spark, sf_dir, tmp)
@@ -66,97 +69,17 @@ def _compaction_probe(spark: SparkSession,
         shutil.rmtree(tmp + "__deltas", ignore_errors=True)
 
 
-def _phash_hashes_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import multimodal as MM
-    return MM.extract_png_ahash(MM.png_media_grad_df(spark, sf_dir))
-
-
-def _winnow_fp_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import dedup as D
-    return D._winnow_fp_raw(spark, sf_dir)
-
-
-def _iso_bin_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import evalrank as ER
-    return ER._iso_bin_frame_raw(spark, sf_dir)
-
-
-def _mrl_ranked_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import similarity as SIM
-    return SIM._mrl_ranked_raw(spark, sf_dir)
-
-
-def _ivf_inc_assign_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import similarity as SIM
-    return SIM._ivf_inc_assign_raw(spark, sf_dir)
-
-
-def _sink_scores_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import scoring
-    return scoring.risk_scores_capped_df(spark, sf_dir)
-
-
-def _score_grid_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import evalrank as ER
-    return ER._score_grid_raw(spark, sf_dir)
-
-
-def _peak_sessions_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import analytics as A
-    return A._peak_sessions_raw(spark, sf_dir)
-
-
-def _semdedup_cell_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import similarity as SIM
-    return SIM._semdedup_cell_frame_raw(spark, sf_dir)
-
-
-def _geo_knn_done_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import relational as R
-    return R._geo_knn_fine_done_raw(spark, sf_dir)
-
-
-def _dsir_doc_bucket_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import curation as CU
-    return CU._dsir_doc_bucket_raw(spark, sf_dir)
-
-
-def _bm25_base_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import text as T
-    terms = sorted({t for ts in T.BM25_QUERIES.values() for t in ts})
-    return T._bm25_base_raw(spark, sf_dir, terms)
-
-
-def _pagerank_ed_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import graph as G
-    edges = G._pagerank_edges(spark, sf_dir)
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    return edges.join(outdeg, "src")
-
-
 def all_probes() -> dict[str, Callable[[SparkSession, str], ContextManager]]:
     """name -> context-manager factory yielding the pre-checkpoint frame.
 
     Keys name the INTERNAL pipeline, not the owning query: one query may
     hide several checkpoint boundaries, and several queries may share
     one memoized upstream (the phash family shares the hash frame)."""
-    return {
-        "s8_serving_pipeline": _s8_probe,
-        "s9_survivor_pipeline": _s9_probe,
-        "compaction_before_frame": _compaction_probe,
-        "phash_hash_frame": _plain(_phash_hashes_raw),
-        "winnow_fp_frame": _plain(_winnow_fp_raw),
-        "iso_bin_frame": _plain(_iso_bin_raw),
-        "mrl_ranked_frame": _plain(_mrl_ranked_raw),
-        "ivf_inc_assign_frame": _plain(_ivf_inc_assign_raw),
-        "sink_scores_frame": _plain(_sink_scores_raw),
-        # r12 optimization round: new checkpoint boundaries
-        "eval_score_grid": _plain(_score_grid_raw),
-        "peak_session_bounds": _plain(_peak_sessions_raw),
-        "semdedup_cell_frame": _plain(_semdedup_cell_raw),
-        "geo_knn_fine_done": _plain(_geo_knn_done_raw),
-        "dsir_doc_bucket": _plain(_dsir_doc_bucket_raw),
-        # r13 optimization round: new checkpoint boundaries
-        "bm25_base_frame": _plain(_bm25_base_raw),
-        "pagerank_edge_deg": _plain(_pagerank_ed_raw),
-    }
+    for m in pkgutil.iter_modules(operators.__path__):
+        importlib.import_module(f"{operators.__name__}.{m.name}")
+    probes = {name: _plain(build)
+              for name, build in domain.CHECKPOINTS.items()}
+    probes.update(s8_serving_pipeline=_s8_probe,
+                  s9_survivor_pipeline=_s9_probe,
+                  compaction_before_frame=_compaction_probe)
+    return probes

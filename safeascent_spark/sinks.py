@@ -22,6 +22,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import domain
+
 
 def write_scores(df: DataFrame, path: str, pred_date: str) -> None:
     """Write one date's scores into the partitioned result table.
@@ -258,25 +260,16 @@ S9_UPSERT_MOD = 5        # delta rows: route_id % 5 == 0
 S9_DATES = ("2024-06-13", "2024-06-14", "2024-06-15")   # d0 purged
 
 
+@domain.checkpointed("sink_scores_frame")
 def _scores_ckpt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The capped production score table, materialized ONCE per
-    (session, sf_dir) and shared by both roundtrip queries.
+    (session, sf_dir) and shared by every sink roundtrip query.
 
     The frame is corpus-proportional (one row per route) and consumed
-    by several writes + the MGET id collect; a per-invocation
-    checkpoint would pin a fresh copy in the persist registry on every
-    call, released only at session GC (ADVICE r11 — the same
-    accumulate-per-call class as the r10 ``_training_frame`` leak), so
-    it routes through ``domain.session_cache`` like every other
-    expensive memoized upstream."""
-    from . import domain
+    by several writes + the MGET id collect, so it is session-scoped
+    like every other expensive reused upstream (ADVICE r11)."""
     from .operators import scoring
-    cache = domain.session_cache(spark, "sink_scores_ckpt")
-    if sf_dir not in cache:
-        df = scoring.risk_scores_capped_df(spark, sf_dir)
-        cache[sf_dir] = domain.persisted(
-            spark, df.localCheckpoint(eager=True))
-    return cache[sf_dir]
+    return scoring.risk_scores_capped_df(spark, sf_dir)
 
 
 def _sink_scratch_dir(spark: SparkSession, prefix: str) -> str:
@@ -301,7 +294,6 @@ def _sink_scratch_dir(spark: SparkSession, prefix: str) -> str:
 
 def _s8_write_phase(spark: SparkSession, sf_dir: str, tmp: str) -> None:
     """S8 write side: base date partition + perturbed decoy date."""
-    from . import domain
     from pyspark.sql import functions as F
 
     scores = _scores_ckpt(spark, sf_dir)
@@ -315,7 +307,6 @@ def _s8_read_frame(spark: SparkSession, sf_dir: str,
                    tmp: str) -> DataFrame:
     """S8 serving read over an already-written ``tmp``: bounded MGET id
     batch + partition prune + broadcast semi-join."""
-    from . import domain
     from pyspark.sql import functions as F
 
     scores = _scores_ckpt(spark, sf_dir)
@@ -353,19 +344,17 @@ def q_s8_score_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join would change the row set; a lossy parquet roundtrip would
     change values — all hash-visible."""
     import shutil as _sh
-    from . import domain
 
     tmp = _sink_scratch_dir(spark, "safeascent_s8_")
     try:
-        out = _s8_serving_pipeline(spark, sf_dir, tmp)
-        res = domain.persisted(spark, out.localCheckpoint(eager=True))
+        res = _s8_serving_pipeline(spark, sf_dir, tmp).localCheckpoint(
+            eager=True)
     finally:
         _sh.rmtree(tmp, ignore_errors=True)
     return res.orderBy("route_id")
 
 
 def sql_s8_score_roundtrip() -> str:
-    from . import domain
     from .operators import scoring
     return f"""
 WITH scores AS ({scoring.risk_scores_capped_sql().strip()}),
@@ -390,12 +379,11 @@ def q_s9_retention_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     A purge of the wrong date, a lost/duplicated delta row, or a broken
     latest-wins resolve all change the aggregate."""
     import shutil as _sh
-    from . import domain
 
     tmp = _sink_scratch_dir(spark, "safeascent_s9_")
     try:
-        out = _s9_survivor_pipeline(spark, sf_dir, tmp)
-        res = domain.persisted(spark, out.localCheckpoint(eager=True))
+        res = _s9_survivor_pipeline(spark, sf_dir, tmp).localCheckpoint(
+            eager=True)
     finally:
         _sh.rmtree(tmp, ignore_errors=True)
         _sh.rmtree(tmp + "__deltas", ignore_errors=True)
@@ -462,7 +450,6 @@ def _s9_survivor_pipeline(spark: SparkSession, sf_dir: str,
 
 
 def sql_s9_retention_survivors() -> str:
-    from . import domain
     from .operators import scoring
     d0, d1, d2 = S9_DATES
     return f"""
@@ -545,7 +532,6 @@ def _compaction_before_frame(spark: SparkSession, sf_dir: str,
     PRE-checkpoint served aggregate with the deltas still live — the
     richest merge-on-read plan (base scan + one delta-root scan +
     latest-wins window), exposed for the plan-probe gate."""
-    from . import domain
 
     scores = _scores_ckpt(spark, sf_dir)
     d = domain.PRED_DATE
@@ -567,7 +553,6 @@ def _compaction_before_frame(spark: SparkSession, sf_dir: str,
 def q_sink_compaction_roundtrip(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     import shutil as _sh
-    from . import domain
 
     d = domain.PRED_DATE
     tmp = _sink_scratch_dir(spark, "safeascent_s10c_")
@@ -575,17 +560,13 @@ def q_sink_compaction_roundtrip(spark: SparkSession,
         # the before-row must materialize BEFORE compaction mutates the
         # directory (the frame is lazy; compaction deletes the deltas
         # it would read)
-        before = domain.persisted(
-            spark,
-            _compaction_before_frame(spark, sf_dir, tmp)
-            .localCheckpoint(eager=True))
+        before = _compaction_before_frame(spark, sf_dir, tmp) \
+            .localCheckpoint(eager=True)
         folded = compact_scores(spark, tmp, d)
         assert folded == 2, folded
         after = _compaction_served_agg(
             spark, tmp, d, "after", _compaction_delta_count(tmp, d))
-        res = domain.persisted(
-            spark,
-            before.unionByName(after).localCheckpoint(eager=True))
+        res = before.unionByName(after).localCheckpoint(eager=True)
     finally:
         _sh.rmtree(tmp, ignore_errors=True)
         _sh.rmtree(tmp + "__deltas", ignore_errors=True)
@@ -593,7 +574,6 @@ def q_sink_compaction_roundtrip(spark: SparkSession,
 
 
 def sql_sink_compaction_roundtrip() -> str:
-    from . import domain
     from .operators import scoring
     return f"""
 WITH scores AS ({scoring.risk_scores_capped_sql().strip()}),

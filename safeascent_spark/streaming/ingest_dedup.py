@@ -38,18 +38,15 @@ def corpus_index(spark: SparkSession, sf_dir: str):
     vocabulary.  localCheckpoint truncates the shingle/vocab lineage so
     every microbatch reuses the materialized index instead of recomputing
     it."""
-    cache = domain.session_cache(spark, "ingest_dedup_index")
-    if sf_dir not in cache:
+    def build():
         sig = D.minhash_df(spark, sf_dir)
         old_sig = sig.filter(
             F.col("doc_id") % D.INCR_NEW_MOD != D.INCR_NEW_REM)
         vocab = T.vocab_df(spark, sf_dir)
         vsize = vocab.count() + 1
-        cache[sf_dir] = (
-            domain.persisted(spark, old_sig.localCheckpoint(eager=True)),
-            domain.persisted(spark, vocab.localCheckpoint(eager=True)),
-            vsize)
-    return cache[sf_dir]
+        return (old_sig.localCheckpoint(eager=True),
+                vocab.localCheckpoint(eager=True), vsize)
+    return domain.session_memo(spark, "ingest_dedup_index", sf_dir, build)
 
 
 def incoming_doc_stream(spark: SparkSession, sf_dir: str,

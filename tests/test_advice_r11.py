@@ -33,13 +33,14 @@ def test_ml_training_frame_is_memoized_and_registered(spark):
     """Repeated q_ml_risk_model-family invocations must reuse ONE cached
     training frame per (session, sf) — the ADVICE r10 leak was a new
     pinned copy per call relying on LRU eviction across a 297-query
-    sweep — and that frame must sit in the persisted-JDF registry so
-    session GC unpersists it."""
+    sweep — and that frame must sit in the session's release registry
+    so session GC unpersists it."""
     a = ML._training_frame(spark, SF_SMOKE)
-    n_after_first = len(getattr(spark, domain._JDF_ATTR))
+    n_after_first = len(domain.release_registry(spark))
+    assert any(j is a._jdf for j in domain.release_registry(spark))
     b = ML._training_frame(spark, SF_SMOKE)
     assert a is b
-    assert len(getattr(spark, domain._JDF_ATTR)) == n_after_first
+    assert len(domain.release_registry(spark)) == n_after_first
     assert a.storageLevel.useMemory  # actually cached, not just memoized
 
 

@@ -8,11 +8,11 @@
    contract.
 2. Corpus-proportional checkpoints (winnowing fingerprint frame, pHash
    hash frame, sink scores frame, isotonic bin frame, matryoshka
-   ranked frame) route through ``domain.session_cache`` keyed by
-   sf_dir, so repeated invocations in one session reuse a single
-   materialization instead of pinning a fresh persist-registry copy
-   per call (the accumulate-per-call class ADVICE r10 first flagged
-   for ``ml._training_frame``).
+   ranked frame) are ``domain.checkpointed(..., scope="session")``
+   builders, memoized per (session, sf_dir), so repeated invocations in
+   one session reuse a single materialization instead of registering a
+   fresh copy for release per call (the accumulate-per-call class
+   ADVICE r10 first flagged for ``ml._training_frame``).
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ def spark():
 
 
 def _registry_len(spark) -> int:
-    return len(getattr(spark, domain._JDF_ATTR, []))
+    return len(domain.release_registry(spark))
 
 
 def test_sink_scratch_dir_honors_shared_root_conf(spark, tmp_path):
@@ -81,7 +81,7 @@ def test_sink_roundtrip_runs_under_shared_scratch_root(spark, tmp_path):
 ])
 def test_corpus_checkpoints_are_session_memoized(spark, build):
     """Second invocation returns the SAME frame object and registers no
-    additional persist-registry entry."""
+    additional release-registry entry."""
     a = build(spark)
     n = _registry_len(spark)
     b = build(spark)
@@ -94,7 +94,7 @@ def test_corpus_checkpoints_are_session_memoized(spark, build):
     "embedding_matryoshka_recall",
 ])
 def test_query_level_checkpoints_do_not_accumulate(spark, qname):
-    """Building a checkpoint-backed query twice must add persist
+    """Building a checkpoint-backed query twice must add release
     registry entries only once (the memoized upstream is shared; the
     second build pins nothing new)."""
     import __spark_entry__ as E

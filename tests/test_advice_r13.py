@@ -68,14 +68,18 @@ def test_expr_fast_path_guards_fall_back_identically(spark, monkeypatch):
 def test_search_mmr_base_memoized_per_session_sf(spark):
     """VERDICT r12 item 3: cand/pair_sim are session-memoized serving-index
     state; a second invocation must reuse the same cached frames (and the
-    query result must be identical across invocations)."""
+    query result must be identical across invocations).  A fresh session
+    starts with an empty release registry: the first call registers
+    exactly the two cached frames, the second registers nothing."""
     from safeascent_spark.operators import forecast as FC
-    r1 = FC.q_search_mmr(spark, SF_ORACLE).collect()
-    cache = domain.session_cache(spark, "mmr_base")
-    assert SF_ORACLE in cache
-    frames = cache[SF_ORACLE]
-    r2 = FC.q_search_mmr(spark, SF_ORACLE).collect()
-    assert cache[SF_ORACLE] is frames
+    s = spark.newSession()
+    r1 = FC.q_search_mmr(s, SF_ORACLE).collect()
+    registry = domain.release_registry(s)
+    assert len(registry) == 2
+    assert all(j.storageLevel().useMemory() for j in registry)
+    frames = list(registry)
+    r2 = FC.q_search_mmr(s, SF_ORACLE).collect()
+    assert registry == frames
     assert r1 == r2
 
 

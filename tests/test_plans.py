@@ -525,7 +525,9 @@ def test_bm25_single_scan_and_truncation(spark):
     assert "partial_count" in plan
     assert n_ops(plan, "CartesianProduct") == 0
     assert n_ops(plan, "SortMergeJoin") == 0, plan[:3000]
-    base_plan = plan_of(T._bm25_base_raw(spark, SF_SMOKE, T.BM25_TERMS))
+    from safeascent_spark import domain
+    base_plan = plan_of(
+        domain.CHECKPOINTS["bm25_topk_base_frame"](spark, SF_SMOKE))
     assert n_ops(base_plan, "Scan parquet") == 1, base_plan[:2000]
     assert n_ops(base_plan, "Exchange") == 0, base_plan[:2000]
 

@@ -426,31 +426,48 @@ def test_streaming_ingest_dedup_matches_batch(spark, tmp_path):
 
 def test_session_gc_unpersists_cached_frames(spark):
     """ADVICE r4: a dead newSession() clone must release the storage its
-    session-cached frames held.  Two properties: (1) the session object
+    session-scoped frames held.  Two properties: (1) the session object
     is actually collectible — the memo lives ON the session, so the
-    cached-DataFrame -> session reference is a collectible cycle, not a
-    weak-key-table immortality trap; (2) the finalizer unpersists the
-    cached frame (CacheManager entries are never ContextCleaner-
-    collected on their own)."""
+    stored-DataFrame -> session reference is a collectible cycle, not a
+    weak-key-table immortality trap; (2) the finalizer frees the frame's
+    blocks, for a ``.cache()`` frame (shingles) and a ``localCheckpoint``
+    frame (the wsim dim) alike: neither CacheManager entries nor
+    checkpoint blocks held by a live RDD are ContextCleaner-collected on
+    their own.  A checkpoint is counted as the persistent RDD its build
+    added."""
     import gc
     import weakref
 
     from safeascent_spark.operators import dedup as D
+    from safeascent_spark.operators import weather as W
 
-    s2 = spark.newSession()
-    sh = D.shingles_cached(s2, SF_SMOKE)
-    sh.count()                       # materialize the cache
-    jdf = sh._jdf                    # py4j handle: no Python-session ref
-    assert jdf.storageLevel().useMemory()
-    ref = weakref.ref(s2)
-    del sh, s2
-    # upstream pyspark pins the LATEST session in RDD.toDF's closure
-    # (_monkey_patch_RDD); churn one more session to displace it — the
-    # exact long-lived-driver pattern the finalizer exists for
-    spark.newSession()
-    gc.collect()
-    assert ref() is None, "session leaked — cycle not collected"
-    assert not jdf.storageLevel().useMemory(), "cache blocks leaked"
+    def pinned() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    # CacheManager is shared by all sessions, so a .cache() plan another
+    # session already cached adds no RDD; check its storage level instead
+    for case, build, stored in [
+            ("cache", D.shingles_cached,
+             lambda jdf, added: jdf.storageLevel().useMemory()),
+            ("checkpoint", W.weather_similarity_cached,
+             lambda jdf, added: len(added) == 1)]:
+        before = pinned()
+        s2 = spark.newSession()
+        df = build(s2, SF_SMOKE)
+        df.count()                   # materialize a .cache()
+        added = pinned() - before
+        jdf = df._jdf                # py4j handle: no Python-session ref
+        assert stored(jdf, added), (case, added)
+        ref = weakref.ref(s2)
+        del df, s2
+        # upstream pyspark pins the LATEST session in RDD.toDF's closure
+        # (_monkey_patch_RDD); churn one more session to displace it — the
+        # exact long-lived-driver pattern the finalizer exists for
+        spark.newSession()
+        gc.collect()
+        assert ref() is None, f"{case}: session leaked — cycle not collected"
+        assert not jdf.storageLevel().useMemory(), f"{case}: cache leaked"
+        assert not added & pinned(), f"{case}: storage blocks leaked"
 
 
 def test_streaming_ingest_restart_is_exactly_once(spark, tmp_path):

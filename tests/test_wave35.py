@@ -90,9 +90,9 @@ def test_ivf_incremental_state_is_session_memoized(spark):
     discipline for corpus-proportional checkpoints)."""
     from safeascent_spark import domain
     SIM.q_ann_ivf_incremental(spark, SF_SMOKE).collect()
-    n = len(getattr(spark, domain._JDF_ATTR))
+    n = len(domain.release_registry(spark))
     SIM.q_ann_ivf_incremental(spark, SF_SMOKE).collect()
-    assert len(getattr(spark, domain._JDF_ATTR)) == n
+    assert len(domain.release_registry(spark)) == n
 
 
 # --- sink_compaction_roundtrip -------------------------------------------------

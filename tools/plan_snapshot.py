@@ -9,9 +9,11 @@ read the diff — an unintentional Exchange/Sort/NestedLoop appearing in the
 diff is the regression the snapshot exists to catch.
 
 ``--probes`` writes docs/probe_<name>.txt for the PRE-checkpoint internal
-pipelines registered in safeascent_spark.planprobes (all of them when no
-names are given) — the plans a checkpoint-returning query hides from its
-own docs/plan_<name>.txt snapshot (VERDICT r11 item 3).
+pipelines in safeascent_spark.planprobes.all_probes() (all of them when no
+names are given): every ``domain.checkpointed`` builder under its
+checkpoint name, plus the three scratch-dir sink probes — the plans a
+checkpoint-returning query hides from its own docs/plan_<name>.txt
+snapshot (VERDICT r11 item 3).
 """
 
 from __future__ import annotations

@@ -60,13 +60,10 @@ def main() -> None:
     for _ in range(N):
         for sf in sfs:
             # evict the memoized upstream so this leg pays it exactly once
-            cache = domain.session_cache(spark, "sink_scores_ckpt")
-            old = cache.pop(sf, None)
+            memo = domain.session_cache(spark, "sink_scores_frame")
+            old = memo.pop(sf, None)
             if old is not None:
-                try:
-                    old.unpersist(False)
-                except Exception:
-                    pass
+                domain._release_session_frames([old._jdf])
             record(sf, "upstream",
                    _t(lambda: sinks._scores_ckpt(spark, sf)))
 
