@@ -59,19 +59,21 @@ _MEMO_ATTR = "_safeascent_memo"
 _JDF_ATTR = "_safeascent_persisted_jdfs"
 
 
-def _release_session_frames(jdfs: list) -> None:
+def release_frames(jdfs: list) -> None:
     """Free the storage of every frame in ``jdfs`` (py4j Dataset handles).
 
     ``Dataset.unpersist`` frees a ``.cache()`` frame, but does nothing on a
     ``localCheckpoint`` frame: its blocks belong to the RDD under the
-    frame's ``LogicalRDD`` plan, so that RDD is unpersisted too.  Runs as
-    the ``weakref.finalize`` callback of a collected session, so storage
-    returns to the SHARED SparkContext at once instead of lingering for
-    the context's lifetime — a leak for long-lived drivers that churn
-    ``newSession()`` clones (ADVICE r4).  The list holds only JVM handles,
-    which do NOT reference the Python session, so the finalize args cannot
-    keep the session alive.  Exceptions are swallowed: if the whole
-    context is gone, the blocks are gone with it."""
+    frame's ``LogicalRDD`` plan, so that RDD is unpersisted too.  Writers
+    (``txlog``) call it on the checkpoints they pin once their commit
+    returns.  It also runs as the ``weakref.finalize`` callback of a
+    collected session, so storage returns to the SHARED SparkContext at
+    once instead of lingering for the context's lifetime — a leak for
+    long-lived drivers that churn ``newSession()`` clones (ADVICE r4).
+    The list holds only JVM handles, which do NOT reference the Python
+    session, so the finalize args cannot keep the session alive.
+    Exceptions are swallowed: if the whole context is gone, the blocks
+    are gone with it."""
     for j in jdfs:
         try:
             j.unpersist(False)
@@ -105,7 +107,7 @@ def session_cache(spark: SparkSession, ns: str) -> dict:
         setattr(spark, _MEMO_ATTR, per)
         jdfs: list = []
         setattr(spark, _JDF_ATTR, jdfs)
-        weakref.finalize(spark, _release_session_frames, jdfs)
+        weakref.finalize(spark, release_frames, jdfs)
     return per.setdefault(ns, {})
 
 

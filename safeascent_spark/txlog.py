@@ -23,6 +23,9 @@ reduced to its core:
   from the parquet footers at commit) so ``read_snapshot(key_between=...)``
   skips files whose range is disjoint from the predicate — Iceberg-style
   data skipping without opening a single pruned file.
+* Manifest entries also carry the Spark schema each file was written with,
+  so a read hands Spark the schema instead of launching a job that
+  re-infers it from the footers — a point lookup runs as one job.
 
 Partition-grain operations rewrite only the partitions they touch; MERGE
 (latest-wins by key) rewrites only partitions present in the source.
@@ -37,6 +40,9 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from . import domain
 
 
 class CommitConflict(RuntimeError):
@@ -94,14 +100,18 @@ def _bloom_build(values, bits_per_key: int = 10, k: int = 7) -> dict:
     m = 64
     while m < max(1, len(values)) * bits_per_key:
         m <<= 1
-    bits = 0
+    # a byte array, not an int: ``int |= 1 << b`` copies all m bits per
+    # set bit, which makes the build quadratic in the key count
+    bits = bytearray(m // 8)
     for v in values:
         h = hashlib.sha256(str(v).encode()).digest()
         h1 = int.from_bytes(h[:8], "little")
         h2 = int.from_bytes(h[8:16], "little") | 1
         for i in range(k):
-            bits |= 1 << ((h1 + i * h2) % m)
-    return {"m": m, "k": k, "bits": format(bits, "x")}
+            b = (h1 + i * h2) % m
+            bits[b >> 3] |= 1 << (b & 7)
+    return {"m": m, "k": k,
+            "bits": format(int.from_bytes(bits, "little"), "x")}
 
 
 def _bloom_may_contain(bloom: dict, value) -> bool:
@@ -162,16 +172,38 @@ def _write_data_files(df: DataFrame, root: str, key: str = "route_id",
                       stats_cols: tuple[str, ...] = (),
                       bloom_key: bool = False) -> list[dict]:
     """Materialize ``df`` under a fresh unique directory; return manifest
-    entries [{path, rows, min_key, max_key[, cols]}] (paths relative to
-    root).  Unreferenced until a manifest commit."""
+    entries [{path, schema, rows, min_key, max_key[, cols][, bloom]}]
+    (paths relative to root, ``schema`` as ``StructType.json()``).
+    Unreferenced until a manifest commit."""
     sub = f"data/{uuid.uuid4().hex}"
     out = Path(root) / sub
     df.write.mode("error").parquet(str(out))
+    schema = df.schema.json()
     return sorted(
-        ({"path": f"{sub}/{p.name}",
+        ({"path": f"{sub}/{p.name}", "schema": schema,
           **_file_stats(p, key, stats_cols, bloom_key)}
          for p in out.iterdir() if p.name.endswith(".parquet")),
         key=lambda e: e["path"])
+
+
+def _read_files(spark: SparkSession, root: str,
+                entries: list[dict]) -> DataFrame:
+    """The parquet files of ``entries`` as one frame.  When every entry
+    records the same schema, Spark is handed that schema and skips the
+    footer-inference job it would otherwise launch; entries committed
+    before schemas were recorded (or of mixed schemas) are inferred."""
+    paths = [str(Path(root) / e["path"]) for e in entries]
+    schemas = {e.get("schema") for e in entries}
+    if len(schemas) == 1 and None not in schemas:
+        schema = StructType.fromJson(json.loads(schemas.pop()))
+        return spark.read.schema(schema).parquet(*paths)
+    return spark.read.parquet(*paths)
+
+
+def _had_blooms(entries: list[dict]) -> bool:
+    """Whether a rewrite of these entries keeps Bloom filters: it does
+    when the data files it replaces carried them."""
+    return any(e.get("bloom") for e in entries if not e.get("tombstone"))
 
 
 def _publish(root: str, manifest: dict) -> bool:
@@ -201,7 +233,9 @@ def read_snapshot(spark: SparkSession, root: str,
                   ref: str | None = None) -> DataFrame:
     """Read a committed snapshot (optionally one partition / an old
     version).  Loads exactly the manifest's file list — no directory
-    listing, no exposure to in-flight writers.
+    listing, no exposure to in-flight writers — with the schema the
+    manifest recorded at commit, so no schema-inference job runs (entries
+    without a recorded schema fall back to inference).
 
     ``key_between=(lo, hi)`` performs manifest-level data skipping: files
     whose ``key`` min/max range (captured from parquet footers at commit)
@@ -266,11 +300,9 @@ def read_snapshot(spark: SparkSession, root: str,
         files, tombs = _prune(files), _prune(tombs)
         if not files:
             continue
-        df = spark.read.parquet(*[str(Path(root) / e["path"]) for e in files])
+        df = _read_files(spark, root, files)
         if tombs:
-            dead = spark.read.parquet(
-                *[str(Path(root) / e["path"]) for e in tombs]) \
-                .select(key).distinct()
+            dead = _read_files(spark, root, tombs).select(key).distinct()
             # deleted-key sets are bounded per maintenance cycle (compact /
             # merge materialize them away), so the anti-join broadcasts
             df = df.join(F.broadcast(dead), key, "left_anti")
@@ -347,24 +379,24 @@ def merge_scores(df: DataFrame, root: str, partition: str,
     def build(base: dict) -> dict:
         entries = base["partitions"].get(partition, [])
         cur_files = [e for e in entries if not e.get("tombstone")]
-        tombs = [e for e in entries if e.get("tombstone")]
         if cur_files:
-            cur = spark.read.parquet(
-                *[str(Path(root) / e["path"]) for e in cur_files])
-            if tombs:  # apply deletion vectors before merging, else the
-                # rewrite would resurrect rows deleted by delete_where
-                dead = spark.read.parquet(
-                    *[str(Path(root) / e["path"]) for e in tombs]) \
-                    .select(key).distinct()
-                cur = cur.join(F.broadcast(dead), key, "left_anti")
+            # the snapshot applies deletion vectors, else the rewrite
+            # would resurrect rows deleted by delete_where
+            cur = read_snapshot(spark, root, version=base["version"],
+                                partition=partition, key=key) \
+                .drop("prediction_date")
             keep = cur.join(src.select(key).distinct(), key, "left_anti")
             merged = keep.unionByName(src.select(*keep.columns))
         else:
             merged = src
         # the rewrite materializes the deletes: tombstones do not carry over
-        return {partition: _write_data_files(merged, root)}
+        return {partition: _write_data_files(
+            merged, root, key=key, bloom_key=_had_blooms(cur_files))}
 
-    return _retrying_commit(root, build)
+    try:
+        return _retrying_commit(root, build)
+    finally:
+        domain.release_frames([src._jdf])
 
 
 def delete_where(spark: SparkSession, root: str, partition: str,
@@ -389,6 +421,7 @@ def delete_where(spark: SparkSession, root: str, partition: str,
     rebased retry re-evaluates against the winner's rows).  No-op (current
     version returned) when the partition is missing or nothing matches."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
+    pinned: list = []
 
     def build(base: dict) -> dict:
         entries = base["partitions"].get(partition, [])
@@ -398,6 +431,7 @@ def delete_where(spark: SparkSession, root: str, partition: str,
                              partition=partition, key=key)
         dead = snap.filter(pred).select(key).distinct() \
                    .localCheckpoint(eager=True)
+        pinned.append(dead._jdf)
         if dead.isEmpty():
             return {}
         tomb = [{**e, "tombstone": True}
@@ -416,7 +450,10 @@ def delete_where(spark: SparkSession, root: str, partition: str,
                 return nxt["version"]
         raise CommitConflict(f"lost 10 commit races on {root}")
 
-    return _noop_aware_commit()
+    try:
+        return _noop_aware_commit()
+    finally:
+        domain.release_frames(pinned)
 
 
 def vacuum(root: str, keep_versions: int = 1,
@@ -489,12 +526,17 @@ def compact(spark: SparkSession, root: str, partition: str,
     schema over a real partition was the r3 ADVICE item 2 hazard.  Returns
     the committed version."""
     m = read_manifest(root)
-    if not m["partitions"].get(partition):
+    entries = m["partitions"].get(partition)
+    if not entries:
         return m["version"]
     cur = read_snapshot(spark, root, partition=partition) \
         .drop("prediction_date").coalesce(target_files) \
         .localCheckpoint(eager=True)
-    return commit_overwrite_partition(cur, root, partition)
+    try:
+        return commit_overwrite_partition(cur, root, partition,
+                                          bloom_key=_had_blooms(entries))
+    finally:
+        domain.release_frames([cur._jdf])
 
 
 ZORDER_BITS = 12  # per-dimension quantization width (2 cols -> 24-bit z)
@@ -546,7 +588,8 @@ def cluster_zorder(spark: SparkSession, root: str, partition: str,
     4-scalar aggregate.  Concurrency story is compact()'s: losing a commit
     race rebases and rewrites on the winner's rows."""
     m = read_manifest(root)
-    if not m["partitions"].get(partition):
+    entries = m["partitions"].get(partition)
+    if not entries:
         return m["version"]
     cur = read_snapshot(spark, root, partition=partition) \
         .drop("prediction_date")
@@ -560,8 +603,12 @@ def cluster_zorder(spark: SparkSession, root: str, partition: str,
                     .sortWithinPartitions("_z")
                     .drop("_z")
                     .localCheckpoint(eager=True))
-    files = _write_data_files(clustered, root, stats_cols=tuple(cols))
-    return _retrying_commit(root, lambda base: {partition: files})
+    try:
+        files = _write_data_files(clustered, root, stats_cols=tuple(cols),
+                                  bloom_key=_had_blooms(entries))
+        return _retrying_commit(root, lambda base: {partition: files})
+    finally:
+        domain.release_frames([clustered._jdf])
 
 
 def table_changes(spark: SparkSession, root: str, v_from: int, v_to: int,

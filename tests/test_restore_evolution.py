@@ -41,6 +41,12 @@ def test_additive_schema_evolution_reads_null_for_old_partitions(
     txlog.commit_overwrite_partition(
         _df(spark, [(2, 2.0, "b")],
             "route_id bigint, score double, grade string"), root, "new")
+    # each partition's entries record the schema they were written with
+    recorded = {p: {e["schema"] for e in es} for p, es in
+                txlog.read_manifest(root)["partitions"].items()}
+    assert len(recorded["old"]) == len(recorded["new"]) == 1
+    assert "grade" not in recorded["old"].pop()
+    assert "grade" in recorded["new"].pop()
     got = {r["route_id"]: r for r in
            txlog.read_snapshot(spark, root).collect()}
     assert got[2]["grade"] == "b"

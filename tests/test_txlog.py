@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import uuid
+
 from safeascent_spark import txlog as T
 
 D = "2024-06-15"
@@ -44,8 +47,8 @@ def test_commit_race_rebases_and_keeps_both_writes(spark, tmp_path):
     fired = {"done": False}
     orig_read = T.read_manifest
 
-    def race_once(r, version=None):
-        m = orig_read(r, version)
+    def race_once(r, version=None, ref=None):
+        m = orig_read(r, version, ref=ref)
         if version is None and not fired["done"]:
             fired["done"] = True
             # interloper commits while our merge is in flight
@@ -291,13 +294,163 @@ def test_bloom_point_lookup_prunes_hash_distributed_files(spark, tmp_path):
 
 
 def test_bloom_survives_merge_and_exactness_under_fp(spark, tmp_path):
-    """The bloom is advisory: a surviving false-positive file only costs a
-    read — the exact key filter still applies.  Probe every committed key
-    and assert each returns exactly its own row (no fp can leak rows)."""
+    """MERGE and compaction keep the Bloom filters of the files they
+    replace, so a point lookup after them still opens fewer files than the
+    manifest lists.  The bloom is advisory: a surviving false-positive file
+    only costs a read — the exact key filter still applies.  Probe every
+    key and assert each returns exactly its own row (no fp can leak rows)."""
     root = str(tmp_path / "t")
     T.commit_overwrite_partition(
-        _rows(spark, [(i, float(i)) for i in range(50)]).repartition(3),
+        _rows(spark, [(i, float(i)) for i in range(0, 100, 2)]).repartition(3),
         root, D, bloom_key=True)
-    for k in (0, 7, 23, 49):
+    # one source file spanning the whole key range: min/max alone can no
+    # longer prune any file of the merged partition
+    T.merge_scores(_rows(spark, [(0, -1.0), (98, -98.0), (51, 51.0)])
+                   .coalesce(1), root, D)
+    want = {i: float(i) for i in range(0, 100, 2)}
+    want.update({0: -1.0, 98: -98.0, 51: 51.0})
+    live = T.read_manifest(root)["partitions"][D]
+    assert len(live) >= 2 and all("bloom" in e for e in live)
+    assert len(T.read_snapshot(spark, root, key_eq=24).inputFiles()) \
+        < len(live)
+    for k in sorted(want):
         rows = T.read_snapshot(spark, root, key_eq=k).collect()
-        assert [(r.route_id, r.risk_score) for r in rows] == [(k, float(k))]
+        assert [(r.route_id, r.risk_score) for r in rows] == [(k, want[k])]
+
+    T.compact(spark, root, D, target_files=2)
+    live = T.read_manifest(root)["partitions"][D]
+    assert all("bloom" in e for e in live)
+    # 25 lies inside every file's key range but was never written
+    miss = T.read_snapshot(spark, root, key_eq=25)
+    assert miss.inputFiles() == [] and miss.count() == 0
+    for k in (0, 24, 51, 98):
+        rows = T.read_snapshot(spark, root, key_eq=k).collect()
+        assert [(r.route_id, r.risk_score) for r in rows] == [(k, want[k])]
+
+    T.cluster_zorder(spark, root, D, cols=("risk_score",), target_files=2)
+    assert all("bloom" in e for e in T.read_manifest(root)["partitions"][D])
+    for k in (0, 24, 51, 98):
+        rows = T.read_snapshot(spark, root, key_eq=k).collect()
+        assert [(r.route_id, r.risk_score) for r in rows] == [(k, want[k])]
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches from this thread."""
+    sc = spark.sparkContext
+    group = f"txlog-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count jobs")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events landed
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookup_and_scan_run_one_job(spark, tmp_path):
+    """The manifest records each file's schema, so a read hands it to Spark
+    and launches no schema-inference job: a point lookup and a partition
+    scan are one job each."""
+    from pyspark.sql import functions as F
+    root = str(tmp_path / "t")
+    df = (spark.range(0, 200)
+          .select(F.col("id").alias("route_id"),
+                  (F.col("id") * 1.0).alias("risk_score"))
+          .repartition(2, "route_id"))
+    T.commit_overwrite_partition(df, root, D, bloom_key=True)
+    T.merge_scores(_rows(spark, [(5, -5.0)]), root, D)
+    assert all("schema" in e for e in T.read_manifest(root)["partitions"][D])
+    got = []
+    assert _jobs(spark, lambda: got.extend(
+        T.read_snapshot(spark, root, key_eq=5).collect())) == 1
+    assert [(r.route_id, r.risk_score) for r in got] == [(5, -5.0)]
+    assert _jobs(spark, lambda: got.extend(
+        T.read_snapshot(spark, root, partition=D).collect())) == 1
+    assert len(got) == 1 + 200
+
+
+def _strip_schemas(root, version):
+    """Rewrite manifest ``version`` as written before schemas were
+    recorded."""
+    m = T.read_manifest(root, version)
+    for entries in m["partitions"].values():
+        for e in entries:
+            e.pop("schema")
+    T._manifest_path(root, version).write_text(json.dumps(m))
+
+
+def test_recorded_schema_equals_inferred_schema(spark, tmp_path):
+    """Reading with the recorded schema yields exactly the schema Spark
+    infers from the files: a non-nullable bigint key, a timestamp and a
+    struct (nested nullability included)."""
+    from pyspark.sql import functions as F
+    root = str(tmp_path / "t")
+    df = (spark.range(0, 10).withColumnRenamed("id", "route_id")
+          .withColumn("ts", F.timestamp_seconds(F.col("route_id")))
+          .withColumn("loc", F.struct(
+              F.col("route_id").alias("n"),
+              (F.col("route_id") * 0.5).alias("x"))))
+    assert not df.schema["route_id"].nullable
+    T.commit_overwrite_partition(df, root, D)
+    entries = T.read_manifest(root)["partitions"][D]
+    assert all(e["schema"] == df.schema.json() for e in entries)
+    snap = T.read_snapshot(spark, root).drop("prediction_date")
+    files = [f"{root}/{e['path']}" for e in entries]
+    assert snap.schema == spark.read.parquet(*files).schema
+    assert sorted(map(tuple, snap.collect())) \
+        == sorted(map(tuple, df.collect()))
+
+
+def test_manifest_without_schemas_reads_same_rows(spark, tmp_path):
+    """A manifest written before schemas were recorded falls back to
+    inference and reads the same rows and schema."""
+    root = str(tmp_path / "t")
+    T.commit_overwrite_partition(
+        _rows(spark, [(i, float(i)) for i in range(20)]).repartition(2),
+        root, D)
+    before = T.read_snapshot(spark, root)
+    rows = sorted(map(tuple, before.collect()))
+    _strip_schemas(root, 1)
+    assert not any("schema" in e
+                   for e in T.read_manifest(root)["partitions"][D])
+    after = T.read_snapshot(spark, root)
+    assert after.schema == before.schema
+    assert sorted(map(tuple, after.collect())) == rows
+    hit = T.read_snapshot(spark, root, key_eq=7).collect()
+    assert [(r.route_id, r.risk_score) for r in hit] == [(7, 7.0)]
+
+
+def test_tombstoned_partition_reads_same_rows(spark, tmp_path):
+    """Deletion-vector files carry their own recorded schema; a tombstoned
+    partition reads the surviving rows with or without recorded schemas."""
+    root = str(tmp_path / "t")
+    T.commit_overwrite_partition(
+        _rows(spark, [(i, float(i)) for i in range(20)]), root, D)
+    v = T.delete_where(spark, root, D, "route_id % 5 = 0")
+    tombs = [e for e in T.read_manifest(root)["partitions"][D]
+             if e.get("tombstone")]
+    assert tombs and all("schema" in e for e in tombs)
+    want = {i: float(i) for i in range(20) if i % 5}
+    assert _snap(spark, root) == want
+    assert T.read_snapshot(spark, root, key_eq=10).count() == 0
+    _strip_schemas(root, v)
+    assert _snap(spark, root) == want
+    assert T.read_snapshot(spark, root, key_eq=10).count() == 0
+
+
+def test_writers_release_their_checkpoints(spark, tmp_path):
+    """MERGE and compaction pin their input with an eager checkpoint;
+    neither leaves it pinned once its commit returns."""
+    pinned = lambda: spark.sparkContext._jsc.getPersistentRDDs().size()
+    root = str(tmp_path / "t")
+    T.commit_overwrite_partition(
+        _rows(spark, [(i, float(i)) for i in range(20)]), root, D)
+    n = pinned()
+    T.merge_scores(_rows(spark, [(3, 30.0), (40, 40.0)]), root, D)
+    assert pinned() <= n
+    n = pinned()
+    T.compact(spark, root, D, target_files=1)
+    assert pinned() <= n
+    want = {i: float(i) for i in range(20)}
+    want.update({3: 30.0, 40: 40.0})
+    assert _snap(spark, root) == want

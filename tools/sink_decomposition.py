@@ -63,7 +63,7 @@ def main() -> None:
             memo = domain.session_cache(spark, "sink_scores_frame")
             old = memo.pop(sf, None)
             if old is not None:
-                domain._release_session_frames([old._jdf])
+                domain.release_frames([old._jdf])
             record(sf, "upstream",
                    _t(lambda: sinks._scores_ckpt(spark, sf)))
 
