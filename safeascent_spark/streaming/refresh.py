@@ -108,7 +108,8 @@ def run_incremental_scores(spark: SparkSession, sf_dir: str,
     Redis tier replaced by snapshot reads.
 
     The touched-bucket collect is bounded by N_WBUCKETS (the weather grid),
-    not by data volume.  Returns micro-batches processed.
+    not by data volume.  Returns the micro-batches MERGEd (one committed
+    version each).
     """
     from .. import txlog
     from ..operators import scoring
@@ -116,11 +117,14 @@ def run_incremental_scores(spark: SparkSession, sf_dir: str,
     batches = {"n": 0}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        batches["n"] += 1
+        # the touched-bucket collect is also the emptiness check: an empty
+        # batch (availableNow's trailing commit) touches none and MERGEs
+        # nothing, so it is not counted
         buckets = [int(r.wbucket) for r in
                    batch_df.select("wbucket").distinct().collect()]
+        if not buckets:
+            return
+        batches["n"] += 1
         locs = (domain.locations_df(spark, sf_dir)
                 .filter(F.col("wbucket").isin(buckets))
                 .select("location_id"))

@@ -17,6 +17,11 @@ reduced to its core:
   creation is atomic and fails with EEXIST if another writer took the
   version, in which case the commit REBASES on the new head and retries
   (bounded).  Readers always see a complete manifest or the previous one.
+* Every writer publishes through the one commit loop,
+  ``_retrying_commit``, and reads what it rewrites at the loop's base
+  version, inside the loop: a rebased retry therefore rewrites on top of
+  the winner's rows instead of clobbering them.  A build that returns
+  ``{}`` is a no-op and publishes nothing.
 * Old manifests stay until ``vacuum`` — which yields snapshot isolation and
   time travel for free (``read_snapshot(version=K)``).
 * Manifest entries carry per-file statistics (row count, key min/max read
@@ -245,8 +250,7 @@ def read_snapshot(spark: SparkSession, root: str,
     (``_write_data_files``'s key) — it is also the column of the
     single-key empty-table fallback schema, which exists only so "read an
     empty/missing table" composes; callers needing a real schema should
-    check ``read_manifest`` first (r3 ADVICE: the fallback previously
-    hardcoded route_id even for tables keyed otherwise).
+    check ``read_manifest`` first.
 
     ``cols_between={col: (lo, hi), ...}`` skips on the per-column ranges a
     clustered commit recorded (``cluster_zorder``'s ``stats_cols``): a file
@@ -326,25 +330,58 @@ def read_snapshot(spark: SparkSession, root: str,
     return out
 
 
-def _retrying_commit(root: str, build, max_retries: int = 10):
-    """Optimistic-commit loop: ``build(base_manifest)`` returns the changed
-    partition->files mapping; on a lost race the commit rebases on the new
-    head and retries.  Partition-disjoint writers therefore both land.
+def _retrying_commit(root: str, build, max_retries: int = 10,
+                     branch: str | None = None) -> int:
+    """The optimistic-commit loop: ``build(base_manifest)`` returns the
+    changed partition->files mapping; on a lost race the commit rebases on
+    the new head and retries.  Partition-disjoint writers therefore both
+    land.  A build that returns ``{}`` is a no-op: the base version is
+    returned and nothing is published.
 
-    Once refs exist, legacy commits ARE main-branch commits (base = main
-    head, pointer advances) — the version-number CAS alone would otherwise
-    stop detecting same-branch conflicts, because the global allocator
-    hands concurrent writers different numbers."""
-    if _has_refs(root):
-        return branch_commit(root, MAIN, build, max_retries)
+    An explicit ``branch`` commits onto that branch.  Once refs exist,
+    default commits ARE main-branch commits (base = main head, pointer
+    advances) — the version-number CAS alone would otherwise stop
+    detecting same-branch conflicts, because the global allocator hands
+    concurrent writers different numbers."""
+    if branch is not None or _has_refs(root):
+        return branch_commit(root, branch or MAIN, build, max_retries)
     for _ in range(max_retries):
         base = read_manifest(root)
         changed = build(base)
+        if not changed:
+            return base["version"]
         nxt = {"version": base["version"] + 1,
                "partitions": {**base["partitions"], **changed}}
         if _publish(root, nxt):
             return nxt["version"]
     raise CommitConflict(f"lost {max_retries} commit races on {root}")
+
+
+def _rewrite_partition(spark: SparkSession, root: str, partition: str,
+                       rewrite, key: str = "route_id",
+                       stats_cols: tuple[str, ...] = ()) -> int:
+    """Commit ``rewrite`` of one partition's rows; returns the version.
+
+    Inside the commit loop, the partition's snapshot at the base version
+    (deletion vectors applied) goes to ``rewrite``, and the frame it
+    returns replaces the partition's files: the tombstones are
+    materialized away, and Bloom filters are kept when the replaced files
+    had them.  ``rewrite`` gets ``None`` when the partition has no live
+    files; a ``None`` result is a no-op."""
+    def build(base: dict) -> dict:
+        live = [e for e in base["partitions"].get(partition, [])
+                if not e.get("tombstone")]
+        cur = read_snapshot(spark, root, version=base["version"],
+                            partition=partition, key=key) \
+            .drop("prediction_date") if live else None
+        out = rewrite(cur)
+        if out is None:
+            return {}
+        return {partition: _write_data_files(
+            out, root, key=key, stats_cols=stats_cols,
+            bloom_key=_had_blooms(live))}
+
+    return _retrying_commit(root, build)
 
 
 def commit_overwrite_partition(df: DataFrame, root: str,
@@ -357,10 +394,8 @@ def commit_overwrite_partition(df: DataFrame, root: str,
     point-lookup skipping (one extra single-column read per file).
     ``branch`` commits onto that branch instead of the default head."""
     files = _write_data_files(df, root, bloom_key=bloom_key)
-    build = lambda base: {partition: files}
-    if branch is not None:
-        return branch_commit(root, branch, build)
-    return _retrying_commit(root, build)
+    return _retrying_commit(root, lambda base: {partition: files},
+                            branch=branch)
 
 
 def merge_scores(df: DataFrame, root: str, partition: str,
@@ -368,33 +403,22 @@ def merge_scores(df: DataFrame, root: str, partition: str,
     """Row-level MERGE (the reference's ON CONFLICT DO UPDATE): source rows
     replace same-key rows of the partition, others are inserted.
 
-    Reads the CURRENT snapshot of the partition inside the retry loop, so a
-    rebased retry merges against the concurrent writer's rows instead of
-    clobbering them — the anomaly the round-2 advice flagged for the
-    directory-sequence stand-in.
+    Merges against the partition's snapshot at the commit's base version,
+    so a rebased retry merges against the concurrent writer's rows instead
+    of clobbering them.  The source is pinned, because every retry
+    re-reads it.
     """
-    spark = df.sparkSession
-    src = df.localCheckpoint(eager=True)  # pin source rows across retries
+    src = df.localCheckpoint(eager=True)
 
-    def build(base: dict) -> dict:
-        entries = base["partitions"].get(partition, [])
-        cur_files = [e for e in entries if not e.get("tombstone")]
-        if cur_files:
-            # the snapshot applies deletion vectors, else the rewrite
-            # would resurrect rows deleted by delete_where
-            cur = read_snapshot(spark, root, version=base["version"],
-                                partition=partition, key=key) \
-                .drop("prediction_date")
-            keep = cur.join(src.select(key).distinct(), key, "left_anti")
-            merged = keep.unionByName(src.select(*keep.columns))
-        else:
-            merged = src
-        # the rewrite materializes the deletes: tombstones do not carry over
-        return {partition: _write_data_files(
-            merged, root, key=key, bloom_key=_had_blooms(cur_files))}
+    def merged(cur: DataFrame | None) -> DataFrame:
+        if cur is None:
+            return src
+        keep = cur.join(src.select(key).distinct(), key, "left_anti")
+        return keep.unionByName(src.select(*keep.columns))
 
     try:
-        return _retrying_commit(root, build)
+        return _rewrite_partition(df.sparkSession, root, partition, merged,
+                                  key=key)
     finally:
         domain.release_frames([src._jdf])
 
@@ -417,9 +441,9 @@ def delete_where(spark: SparkSession, root: str, partition: str,
     unchanged.
 
     ``predicate`` is a Column or SQL string evaluated against the
-    partition's CURRENT snapshot inside the optimistic-commit loop (a
-    rebased retry re-evaluates against the winner's rows).  No-op (current
-    version returned) when the partition is missing or nothing matches."""
+    partition's snapshot at the commit's base version (a rebased retry
+    re-evaluates against the winner's rows).  No-op (current version
+    returned) when the partition is missing or nothing matches."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     pinned: list = []
 
@@ -438,20 +462,8 @@ def delete_where(spark: SparkSession, root: str, partition: str,
                 for e in _write_data_files(dead, root, key=key)]
         return {partition: entries + tomb}
 
-    def _noop_aware_commit():
-        for _ in range(10):
-            base = read_manifest(root)
-            changed = build(base)
-            if not changed:
-                return base["version"]
-            nxt = {"version": base["version"] + 1,
-                   "partitions": {**base["partitions"], **changed}}
-            if _publish(root, nxt):
-                return nxt["version"]
-        raise CommitConflict(f"lost 10 commit races on {root}")
-
     try:
-        return _noop_aware_commit()
+        return _retrying_commit(root, build)
     finally:
         domain.release_frames(pinned)
 
@@ -466,7 +478,7 @@ def vacuum(root: str, keep_versions: int = 1,
     manifest (the documented unreferenced-until-commit window, including
     ``merge_scores`` retry attempts), so a zero-grace vacuum could delete
     files whose manifest is about to publish — the Delta/Iceberg retention
-    threshold exists for exactly this (r3 ADVICE item 1).  Pass
+    threshold exists for exactly this.  Pass
     ``grace_seconds=0`` only when the caller holds exclusive access."""
     import time
     cutoff = time.time() - grace_seconds
@@ -515,28 +527,19 @@ def vacuum(root: str, keep_versions: int = 1,
 
 def compact(spark: SparkSession, root: str, partition: str,
             target_files: int = 4) -> int:
-    """OPTIMIZE analog: rewrite one partition's current snapshot as
+    """OPTIMIZE analog: rewrite one partition's snapshot as
     ``target_files`` files and commit the swap atomically.
 
     Readers are never disturbed — they hold whichever manifest version they
-    opened (old files persist until ``vacuum``), and a concurrent MERGE that
-    wins the version race simply makes this compaction rebase and rewrite
-    on top of it.  A missing/empty partition is a no-op returning the
-    current version — committing the empty-table fallback's degenerate
-    schema over a real partition was the r3 ADVICE item 2 hazard.  Returns
-    the committed version."""
-    m = read_manifest(root)
-    entries = m["partitions"].get(partition)
-    if not entries:
-        return m["version"]
-    cur = read_snapshot(spark, root, partition=partition) \
-        .drop("prediction_date").coalesce(target_files) \
-        .localCheckpoint(eager=True)
-    try:
-        return commit_overwrite_partition(cur, root, partition,
-                                          bloom_key=_had_blooms(entries))
-    finally:
-        domain.release_frames([cur._jdf])
+    opened (old files persist until ``vacuum``).  The snapshot is read at
+    the commit's base version, so a concurrent MERGE that wins the version
+    race makes this compaction rebase and rewrite on top of it.  A
+    partition without live files is a no-op returning the current version:
+    committing the empty-table fallback's degenerate schema over it would
+    replace the real schema.  Returns the committed version."""
+    return _rewrite_partition(
+        spark, root, partition,
+        lambda cur: None if cur is None else cur.coalesce(target_files))
 
 
 ZORDER_BITS = 12  # per-dimension quantization width (2 cols -> 24-bit z)
@@ -584,31 +587,25 @@ def cluster_zorder(spark: SparkSession, root: str, partition: str,
     ~|domain| / target_files^(1/n_cols), so ``read_snapshot(cols_between=
     {...})`` prunes multiplicatively across dimensions.  The rewrite is one
     range-exchange on the z-value (repartitionByRange = sample + range
-    shuffle, no skew pile-up on hot cells); bounds come from one bounded
-    4-scalar aggregate.  Concurrency story is compact()'s: losing a commit
-    race rebases and rewrites on the winner's rows."""
-    m = read_manifest(root)
-    entries = m["partitions"].get(partition)
-    if not entries:
-        return m["version"]
-    cur = read_snapshot(spark, root, partition=partition) \
-        .drop("prediction_date")
-    agg = cur.agg(*[f(F.col(c)).alias(f"{f.__name__}_{c}")
-                    for c in cols for f in (F.min, F.max)]).collect()[0]
-    bounds = [(float(agg[f"min_{c}"]), float(agg[f"max_{c}"]))
-              for c in cols]
-    z = _zvalue([F.col(c) for c in cols], bounds)
-    clustered = (cur.withColumn("_z", z)
-                    .repartitionByRange(target_files, "_z")
-                    .sortWithinPartitions("_z")
-                    .drop("_z")
-                    .localCheckpoint(eager=True))
-    try:
-        files = _write_data_files(clustered, root, stats_cols=tuple(cols),
-                                  bloom_key=_had_blooms(entries))
-        return _retrying_commit(root, lambda base: {partition: files})
-    finally:
-        domain.release_frames([clustered._jdf])
+    shuffle, no skew pile-up on hot cells); bounds come from one min/max
+    aggregate over the frame being rewritten.  Concurrency is
+    ``compact``'s: a lost commit race re-reads and re-clusters the
+    winner's rows."""
+    def clustered(cur: DataFrame | None) -> DataFrame | None:
+        if cur is None:
+            return None
+        agg = cur.agg(*[f(F.col(c)).alias(f"{f.__name__}_{c}")
+                        for c in cols for f in (F.min, F.max)]).collect()[0]
+        bounds = [(float(agg[f"min_{c}"]), float(agg[f"max_{c}"]))
+                  for c in cols]
+        z = _zvalue([F.col(c) for c in cols], bounds)
+        return (cur.withColumn("_z", z)
+                   .repartitionByRange(target_files, "_z")
+                   .sortWithinPartitions("_z")
+                   .drop("_z"))
+
+    return _rewrite_partition(spark, root, partition, clustered,
+                              stats_cols=tuple(cols))
 
 
 def table_changes(spark: SparkSession, root: str, v_from: int, v_to: int,
@@ -695,6 +692,14 @@ def table_changes(spark: SparkSession, root: str, v_from: int, v_to: int,
     return out
 
 
+def _replace_all(target: dict):
+    """Build that replaces the whole partition mapping with ``target``:
+    partitions absent from it revert to absent (``[]``), which the
+    additive merge of the commit loop cannot express otherwise."""
+    return lambda base: {p: target.get(p, []) for p in
+                         set(base["partitions"]) | set(target)}
+
+
 def restore_table(root: str, version: int) -> int:
     """RESTORE TABLE TO VERSION analog: republish version ``version``'s
     partition mapping as a NEW head version (no data movement — manifests
@@ -702,16 +707,8 @@ def restore_table(root: str, version: int) -> int:
     travel to the bad interval keeps working until ``vacuum``.  Goes
     through the optimistic-commit loop, so a concurrent writer cannot be
     silently clobbered: the restore lands on top of whatever won."""
-    target = read_manifest(root, version)["partitions"]
-
-    def build(base: dict) -> dict:
-        # replace the whole mapping: partitions created after `version`
-        # must revert to absent, which the merge in _retrying_commit can't
-        # express additively — so return every key, absent ones as []
-        return {p: target.get(p, []) for p in
-                set(base["partitions"]) | set(target)}
-
-    return _retrying_commit(root, build)
+    return _retrying_commit(
+        root, _replace_all(read_manifest(root, version)["partitions"]))
 
 
 # --- Named refs: branches and tags (Iceberg-style) ----------------------------
@@ -816,13 +813,16 @@ def branch_commit(root: str, name: str, build,
     """Optimistic commit ON A BRANCH: base = the branch head's manifest,
     the new manifest records ``parent``/``branch``, and the branch pointer
     advances via the ref CAS.  A lost pointer race orphans the published
-    manifest (vacuum collects it) and rebases."""
+    manifest (vacuum collects it) and rebases.  A build that returns
+    ``{}`` is a no-op returning the branch head."""
     for _ in range(max_retries):
         entry, meta = _ref_head_meta(root, name)
         if meta.get("type") == "tag":
             raise ValueError(f"cannot commit to tag {name!r}")
         base = read_manifest(root, meta["version"])
         changed = build(base)
+        if not changed:
+            return meta["version"]
         published = None
         for _ in range(max_retries):
             v = current_version(root) + 1
@@ -852,14 +852,8 @@ def fast_forward(root: str, name: str = MAIN, to_ref: str | None = None,
     v = resolve_ref(root, to_ref) if to_ref else to_version
     if v is None:
         raise ValueError("need to_ref or to_version")
-    target = read_manifest(root, v)["partitions"]
-
-    def build(base: dict) -> dict:
-        # full replacement (partitions absent in the source revert to [])
-        return {p: target.get(p, []) for p in
-                set(base["partitions"]) | set(target)}
-
-    return branch_commit(root, name, build)
+    return branch_commit(root, name,
+                         _replace_all(read_manifest(root, v)["partitions"]))
 
 
 def main_lineage_versions(root: str) -> list[int]:

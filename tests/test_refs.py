@@ -52,6 +52,25 @@ def test_tags_pin_and_are_immutable(spark, tmp_path):
         txlog.branch_commit(root, "release-1", lambda base: {})
 
 
+def test_delete_on_tagged_table_advances_main(spark, tmp_path):
+    """Once a ref exists, a delete is a main-branch commit: default readers
+    see it and ``main`` points at it.  A delete that matches nothing
+    publishes no version."""
+    root = str(tmp_path / "t")
+    txlog.commit_overwrite_partition(_df(spark, [1, 2, 3], 1.0), root, "p=a")
+    txlog.create_tag(root, "before")
+    v = txlog.delete_where(spark, root, "p=a", "route_id = 2")
+    assert txlog.resolve_ref(root, "main") == v == 2
+    assert sorted(r.route_id for r in
+                  txlog.read_snapshot(spark, root).collect()) == [1, 3]
+    assert sorted(r.route_id for r in
+                  txlog.read_snapshot(spark, root, ref="before")
+                       .collect()) == [1, 2, 3]
+    assert txlog.delete_where(spark, root, "p=a", "route_id = 99") == v
+    assert txlog.current_version(root) == v
+    assert txlog.resolve_ref(root, "main") == v
+
+
 def test_vacuum_keeps_ref_pinned_versions(spark, tmp_path):
     root = str(tmp_path / "t")
     txlog.commit_overwrite_partition(_df(spark, [1], 1.0), root, "p=a")

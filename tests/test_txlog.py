@@ -5,6 +5,8 @@ from __future__ import annotations
 import json
 import uuid
 
+import pytest
+
 from safeascent_spark import txlog as T
 
 D = "2024-06-15"
@@ -38,30 +40,40 @@ def test_merge_is_latest_wins_insert_or_update(spark, tmp_path):
     assert _snap(spark, root) == {1: 10.0, 2: 99.0, 3: 30.0}
 
 
-def test_commit_race_rebases_and_keeps_both_writes(spark, tmp_path):
-    """Simulate a writer that lands BETWEEN this commit's manifest read and
-    its publish: the first publish must fail (version taken) and the retry
-    must merge against the interloper's rows, not clobber them."""
+_IN_FLIGHT = {
+    "merge_scores": (lambda spark, root: T.merge_scores(
+        _rows(spark, [(1, 11.0)]), root, D), {1: 11.0, 7: 70.0}),
+    "compact": (lambda spark, root: T.compact(spark, root, D, target_files=1),
+                {1: 10.0, 7: 70.0}),
+    "cluster_zorder": (lambda spark, root: T.cluster_zorder(
+        spark, root, D, cols=("risk_score",), target_files=1),
+        {1: 10.0, 7: 70.0}),
+}
+
+
+@pytest.mark.parametrize("writer", sorted(_IN_FLIGHT))
+def test_commit_race_rebases_and_keeps_both_writes(spark, tmp_path, writer,
+                                                   monkeypatch):
+    """A MERGE that lands BETWEEN a writer's read and its publish: the
+    writer's first publish must fail (version taken) and its retry must
+    rewrite on top of the interloper's rows, not clobber them."""
     root = str(tmp_path / "t")
     T.commit_overwrite_partition(_rows(spark, [(1, 10.0)]), root, D)
+    write, want = _IN_FLIGHT[writer]
     fired = {"done": False}
-    orig_read = T.read_manifest
+    orig_publish = T._publish
 
-    def race_once(r, version=None, ref=None):
-        m = orig_read(r, version, ref=ref)
-        if version is None and not fired["done"]:
+    def race_once(r, manifest):
+        if not fired["done"]:
             fired["done"] = True
-            # interloper commits while our merge is in flight
+            # interloper commits while the writer is in flight
             T.merge_scores(_rows(spark, [(7, 70.0)]), root, D)
-            return m  # stale base: publish of v(m+1) must now collide
-        return m
+        return orig_publish(r, manifest)
 
-    T.read_manifest = race_once
-    try:
-        T.merge_scores(_rows(spark, [(1, 11.0)]), root, D)
-    finally:
-        T.read_manifest = orig_read
-    assert _snap(spark, root) == {1: 11.0, 7: 70.0}
+    monkeypatch.setattr(T, "_publish", race_once)
+    write(spark, root)
+    monkeypatch.undo()
+    assert _snap(spark, root) == want
     assert T.current_version(root) == 3  # base + interloper + rebased retry
 
 
@@ -439,18 +451,21 @@ def test_tombstoned_partition_reads_same_rows(spark, tmp_path):
 
 
 def test_writers_release_their_checkpoints(spark, tmp_path):
-    """MERGE and compaction pin their input with an eager checkpoint;
-    neither leaves it pinned once its commit returns."""
+    """No txlog writer leaves a checkpoint pinned once its commit returns:
+    MERGE pins its source, delete_where its deleted keys."""
     pinned = lambda: spark.sparkContext._jsc.getPersistentRDDs().size()
     root = str(tmp_path / "t")
     T.commit_overwrite_partition(
         _rows(spark, [(i, float(i)) for i in range(20)]), root, D)
-    n = pinned()
+    base = pinned()
     T.merge_scores(_rows(spark, [(3, 30.0), (40, 40.0)]), root, D)
-    assert pinned() <= n
-    n = pinned()
+    assert pinned() <= base
     T.compact(spark, root, D, target_files=1)
-    assert pinned() <= n
+    assert pinned() <= base
+    T.cluster_zorder(spark, root, D, cols=("risk_score",), target_files=2)
+    assert pinned() <= base
+    T.delete_where(spark, root, D, "route_id = 40")
+    assert pinned() <= base
     want = {i: float(i) for i in range(20)}
-    want.update({3: 30.0, 40: 40.0})
+    want[3] = 30.0
     assert _snap(spark, root) == want
