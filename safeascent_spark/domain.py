@@ -221,12 +221,16 @@ def ts_seconds(col):
 
 
 def fan_out(df: DataFrame) -> DataFrame:
-    """Ensure the probe side of a broadcast cross join has enough partitions.
+    """Ensure a join input has enough partitions: the probe side of a
+    broadcast join, or either side of a shuffle join.
 
     The local test parquet files are single row-groups, so FileScan yields 1
-    partition and a BroadcastNestedLoopJoin would run on one core.  On a real
-    cluster the probe side already has >= parallelism partitions and this is
-    a no-op — we only pay the small-shuffle when the input is undersplit.
+    partition.  On the probe side of a broadcast join that runs the join on
+    one core.  On a side of a shuffle join it makes that side's exchange
+    one map task, and AQE splits a skewed reducer partition only at
+    map-output boundaries, so the skew-join split can never cut it.  On a
+    real cluster the input already has >= parallelism partitions and this
+    is a no-op — we only pay the small-shuffle when the input is undersplit.
     """
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism

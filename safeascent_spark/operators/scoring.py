@@ -303,14 +303,22 @@ def _candidate_pairs(spark: SparkSession, sf_dir: str, pred_date: str,
     threshold and the grid join becomes a shuffle join on (route_type,
     cell).  ``broadcast_dim=None`` chooses automatically from the dim's
     footer-statistics size vs this session's broadcast threshold
-    (``dim_broadcasts``).  Geographic cells skew (accident hot-spots cluster), so THIS
-    form must run with AQE skew-join enabled — at cluster scale set
-    ``spark.sql.adaptive.skewJoin.*`` thresholds proportional to partition
-    sizes; ``tests/test_skew_grid.py`` pins that the skew split actually
-    activates on a 30%-hot cell and that results match the broadcast form
-    exactly.  (``skew.py:replicate_broadcast_join`` remains the manual
-    alternative when the dim still broadcasts but one cell dominates the
-    probe side.)
+    (``dim_broadcasts``).  Geographic cells skew (accident hot-spots
+    cluster), so THIS form must run with AQE skew-join enabled — at cluster
+    scale set ``spark.sql.adaptive.skewJoin.*`` thresholds proportional to
+    partition sizes.  The dim replication already spreads a hot cell over
+    7 route types x 9 neighbour cells = 63 join keys, so its reducer skew
+    is mild (about 1.6x the median partition at sf0.01), not one tower.
+    AQE splits a skewed partition only at map-output boundaries, and a dim
+    side written by one map task can never be split: the supplier scan
+    behind the dim is one partition on local data, so this form passes
+    the replicated dim through ``domain.fan_out`` before its exchange (a
+    no-op when the scan is already split).  ``tests/test_skew_grid.py``
+    pins that the skew split activates on a 30%-hot cell, that the dim
+    side has more than one mapper, and that results match the broadcast
+    form exactly.  (``skew.py:replicate_broadcast_join`` remains the
+    manual alternative when the dim still broadcasts but one cell
+    dominates the probe side.)
     """
     r = _route_side(spark, sf_dir, routes)
     if broadcast_dim is None:  # auto: size the dim against the session conf
@@ -328,6 +336,8 @@ def _candidate_pairs(spark: SparkSession, sf_dir: str, pred_date: str,
                 .withColumn("cx", F.col("a_cx") + F.col("dx"))
                 .withColumn("cy", F.col("a_cy") + F.col("dy"))
                 .drop("dx", "dy"))
+        if not broadcast_dim:
+            ax = domain.fan_out(ax)
         keys = ["route_type", "cx", "cy"]
     else:
         keys = ["route_type"]

@@ -11,6 +11,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Driver heap for a local session: 16g, but never more than half the
+    machine's physical memory.
+
+    In local mode the driver JVM is also the executor, and G1 grows the
+    committed heap toward its maximum rather than collecting sooner.  With
+    a maximum above physical memory the process keeps growing until the
+    kernel kills it: the full test suite on a 16 GB machine took the JVM to
+    14.5 GB resident and lost it mid-run.  Half leaves room for the Python
+    workers and for tests that start further JVMs.  ``SPARK_DRIVER_MEMORY``
+    still overrides.
+    """
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 2 // 2**30))}g"
+
+
 def get_spark(app_name: str = "safeascent_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -34,7 +50,8 @@ def get_spark(app_name: str = "safeascent_spark",
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # driver-generated parquet stores TIMESTAMP(NANOS,false)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY",
+                                                     _default_driver_memory()))
         .config("spark.ui.enabled", "false")
     )
     spark = builder.getOrCreate()

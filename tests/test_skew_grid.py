@@ -7,13 +7,19 @@ data/DATABASE_STRUCTURE.md), so one cell can hold a large share of all
 accidents.  While the accident dim broadcasts, a hot cell only affects
 probe-side work distribution (no reducer hotspot); the dangerous regime is
 the SHUFFLE form (``broadcast_dim=False``) at a scale where the dim no
-longer broadcasts — there a hot (route_type, cell) key concentrates a huge
-pair partition on one reducer.  These tests pin that:
+longer broadcasts.  The dim replicates each accident to 7 route types x 9
+neighbour cells, so a hot cell lands on 63 (route_type, cell) keys rather
+than one: the dim-side reducer skew is mild (about 1.6x the median
+partition at sf0.01), not one tower.  AQE splits a skewed partition only at
+map-output boundaries, so the dim side must reach its exchange in more than
+one map task.  These tests pin that:
 
 * AQE's skew-join split ACTIVATES on a 30%-hot cell when the shuffle form
   runs with skew thresholds proportional to the data (what a cluster
-  deployment must configure), and
-* the skewed shuffle plan still produces exactly the broadcast-form rows.
+  deployment must configure),
+* the skewed shuffle plan still produces exactly the broadcast-form rows,
+* the shuffle form's dim-side exchange has more than one mapper, and the
+  broadcast form gains no exchange under the dim's broadcast.
 """
 
 from __future__ import annotations
@@ -121,3 +127,64 @@ def test_dim_broadcast_auto_chooser(spark):
         pairs.filter(F.col("distance_km") <= 300.0)).collect()
     want = df.collect()
     assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan, descending through AQE wrappers
+    (AdaptiveSparkPlan -> its current plan, a query stage -> its exchange)."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        kids = [node.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [node.plan()]
+    else:
+        ch = node.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    out = [node]
+    for k in kids:
+        out.extend(_plan_nodes(k))
+    return out
+
+
+def _carries_dim(node):
+    """True when the node's output is the accident-class dim (its tfac)."""
+    return "tfac#" in node.output().toString()
+
+
+def test_shuffle_form_dim_side_has_many_map_tasks(skew_session):
+    """AQE splits a skewed reducer partition only at map-output boundaries,
+    so a dim side written by ONE map task can never be split however skewed
+    it is.  The local supplier scan is a single partition; the shuffle form
+    must fan the replicated dim out before the join's hash exchange (the
+    fan-out's own round-robin exchange still reads the one scan task)."""
+    s = skew_session
+    pairs = scoring._pair_influence_select(scoring._candidate_pairs(
+        s, SF_ORACLE, domain.PRED_DATE, None, grid=True,
+        accidents=_hot_accidents(s), broadcast_dim=False))
+    df = pairs.groupBy("route_id").agg(F.sum("influence").alias("x"))
+    df.collect()
+    stages = [n for n in _plan_nodes(df._jdf.queryExecution().executedPlan())
+              if n.nodeName() == "ShuffleQueryStage" and _carries_dim(n)
+              and n.shuffle().outputPartitioning().toString()
+                   .startswith("hashpartitioning")]
+    assert stages, "no dim-side shuffle stage in the final plan"
+    mappers = [n.shuffle().numMappers() for n in stages]
+    assert all(m > 1 for m in mappers), mappers
+
+
+def test_broadcast_form_dim_has_no_extra_exchange(skew_session):
+    """The fan-out belongs to the shuffle form only: the broadcast form
+    still plans a BroadcastHashJoin, and nothing under the dim's broadcast
+    is a shuffle exchange."""
+    s = skew_session
+    pairs = scoring._pair_influence_select(scoring._candidate_pairs(
+        s, SF_ORACLE, domain.PRED_DATE, None, grid=True,
+        accidents=_hot_accidents(s), broadcast_dim=True))
+    nodes = _plan_nodes(pairs._jdf.queryExecution().executedPlan())
+    assert any(n.nodeName() == "BroadcastHashJoin" for n in nodes)
+    dim_bcasts = [n for n in nodes
+                  if n.nodeName() == "BroadcastExchange" and _carries_dim(n)]
+    assert dim_bcasts, "the accident-class dim is not broadcast"
+    for b in dim_bcasts:
+        under = [n.nodeName() for n in _plan_nodes(b)[1:]]
+        assert "Exchange" not in under, under
