@@ -122,6 +122,10 @@ def main() -> None:
         # (the full total includes the six r5 heavies added in r6)
         "value_legacy8": round(sum(v for k, v in per_query.items()
                                    if k in HEADLINE[:8]), 3),
+        # the cores the timings ran on: a reading is comparable only to
+        # one taken at the same parallelism and master
+        "cpus_effective": spark.sparkContext.defaultParallelism,
+        "master": spark.sparkContext.master,
     }))
     spark.stop()
 

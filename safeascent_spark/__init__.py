@@ -9,7 +9,7 @@ Layout:
 - domain.py    derived routes/accidents/weather tables over the test data
 - operators/   scoring, weather similarity, relational, analytics,
                dedup, similarity search, text stats
-- sinks.py     partitioned score-table sink + retention
+- sinks.py     score-table roundtrips over txlog (upsert, retention)
 - streaming/   daily-refresh re-expression over Structured Streaming
 """
 

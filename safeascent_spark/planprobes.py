@@ -55,7 +55,6 @@ def _s9_probe(spark: SparkSession, sf_dir: str) -> Iterator[DataFrame]:
         yield sinks._s9_survivor_pipeline(spark, sf_dir, tmp)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(tmp + "__deltas", ignore_errors=True)
 
 
 @contextlib.contextmanager
@@ -66,7 +65,6 @@ def _compaction_probe(spark: SparkSession,
         yield sinks._compaction_before_frame(spark, sf_dir, tmp)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(tmp + "__deltas", ignore_errors=True)
 
 
 def all_probes() -> dict[str, Callable[[SparkSession, str], ContextManager]]:

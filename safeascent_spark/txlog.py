@@ -1,11 +1,11 @@
 """Versioned-manifest table format: atomic commits over plain parquet.
 
 The reference upserts scores with ``INSERT ... ON CONFLICT DO UPDATE``
-under PostgreSQL's transactional guarantees
-(safety_computation_optimized.py:827-905).  The filesystem merge-on-read
-stand-in in ``sinks.py`` is single-writer; this module supplies the missing
-catalog-table semantics — the same protocol Delta Lake / Iceberg use,
-reduced to its core:
+under PostgreSQL's transactional guarantees and purges dates past
+retention (safety_computation_optimized.py:827-905).  This module is the
+engine's one score-table format — the sink roundtrips in ``sinks.py``
+write, upsert, purge and compact through it — with the catalog-table
+semantics Delta Lake / Iceberg supply, reduced to their core:
 
 * A table is ``<root>/data/*.parquet`` plus a log ``<root>/_txlog/v{N}.json``.
   Each manifest lists the EXACT data files of that snapshot (grouped by
@@ -31,9 +31,15 @@ reduced to its core:
 * Manifest entries also carry the Spark schema each file was written with,
   so a read hands Spark the schema instead of launching a job that
   re-infers it from the footers — a point lookup runs as one job.
+* MERGE and DELETE rewrite nothing: each appends a LAYER to its partition
+  under the next sequence number ``seq`` (the Iceberg v2 equality-delete
+  rule).  A layer's keys hide the same-key rows of every lower-``seq``
+  data file of the partition; a MERGE layer is the source's rows, a
+  DELETE layer (tombstone) holds keys only.  Files written by an
+  overwrite or a rewrite have no ``seq`` and sit at 0; ``compact`` and
+  ``cluster_zorder`` fold the layers back into plain files.
 
-Partition-grain operations rewrite only the partitions they touch; MERGE
-(latest-wins by key) rewrites only partitions present in the source.
+Partition-grain operations rewrite only the partitions they touch.
 """
 
 from __future__ import annotations
@@ -46,8 +52,6 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from . import domain
 
 
 class CommitConflict(RuntimeError):
@@ -164,13 +168,18 @@ def _file_stats(path: Path, key: str,
     if cols:
         out["cols"] = cols
     if bloom_key and key in idx:
-        # one single-column columnar read at commit time (the Iceberg
-        # write-side stats pass); min/max can't prune point lookups on
-        # unsorted keys — the bloom can
-        import pyarrow.parquet as pq2
-        vals = pq2.read_table(path, columns=[key]).column(0).to_pylist()
-        out["bloom"] = _bloom_build([v for v in vals if v is not None])
+        # the Iceberg write-side stats pass: min/max can't prune point
+        # lookups on unsorted keys — the bloom can
+        out["bloom"] = _bloom_build(_file_keys(path, key))
     return out
+
+
+def _file_keys(path: Path, key: str) -> set:
+    """The non-null ``key`` values of one file: one single-column read on
+    the driver, for a Bloom filter at commit or a layer's keys at read."""
+    import pyarrow.parquet as pq
+    vals = pq.read_table(path, columns=[key]).column(0).to_pylist()
+    return set(vals) - {None}
 
 
 def _write_data_files(df: DataFrame, root: str, key: str = "route_id",
@@ -206,9 +215,29 @@ def _read_files(spark: SparkSession, root: str,
 
 
 def _had_blooms(entries: list[dict]) -> bool:
-    """Whether a rewrite of these entries keeps Bloom filters: it does
-    when the data files it replaces carried them."""
+    """Whether files written into a partition of these entries get Bloom
+    filters: they do when the partition's data files carry them, so a
+    rewrite keeps them and a point lookup can prune every layer."""
     return any(e.get("bloom") for e in entries if not e.get("tombstone"))
+
+
+def _seq(entry: dict) -> int:
+    """An entry's layer number: files of an overwrite or a rewrite are 0,
+    MERGE and DELETE layers count up from 1.  Tombstones committed before
+    layers were numbered hid every data file of their partition, which is
+    what 1 does."""
+    return entry.get("seq", 1 if entry.get("tombstone") else 0)
+
+
+def _outside(key: str, keys: set):
+    """Rows whose ``key`` is null or not in ``keys``.  Integer keys go to
+    Spark as one SQL string of bigint literals: ``isin`` sends one py4j
+    call per literal, and a 1,000-key list took 0.44 s to build."""
+    vals = sorted(keys)
+    if all(type(v) is int for v in vals):
+        return F.expr(f"`{key}` IS NULL OR `{key}` NOT IN "
+                      f"({', '.join(f'{v}L' for v in vals)})")
+    return F.col(key).isNull() | ~F.col(key).isin(vals)
 
 
 def _publish(root: str, manifest: dict) -> bool:
@@ -240,7 +269,9 @@ def read_snapshot(spark: SparkSession, root: str,
     version).  Loads exactly the manifest's file list — no directory
     listing, no exposure to in-flight writers — with the schema the
     manifest recorded at commit, so no schema-inference job runs (entries
-    without a recorded schema fall back to inference).
+    without a recorded schema fall back to inference).  MERGE and DELETE
+    layers apply as literal key filters on the older files, so a read is
+    one Spark job however many layers the partition holds.
 
     ``key_between=(lo, hi)`` performs manifest-level data skipping: files
     whose ``key`` min/max range (captured from parquet footers at commit)
@@ -271,15 +302,8 @@ def read_snapshot(spark: SparkSession, root: str,
         parts = {partition: parts.get(partition, [])}
     frames = []
     for pval, entries in sorted(parts.items()):
-        # deletion vectors: tombstone entries list DELETED keys
-        # (merge-on-read row deletes, see delete_where); they ride the
-        # same pruning as data files — a tombstone whose key range is
-        # disjoint from the predicate cannot affect any surviving row,
-        # because survivors are re-filtered exactly below
-        tombs = [e for e in entries if e.get("tombstone")]
-        files = [e for e in entries if not e.get("tombstone")]
 
-        def _prune(fs: list[dict]) -> list[dict]:
+        def _prune(fs: list[dict], by_cols: bool = True) -> list[dict]:
             if key_between is not None:
                 lo, hi = key_between
                 fs = [e for e in fs
@@ -291,7 +315,7 @@ def read_snapshot(spark: SparkSession, root: str,
                           or e["min_key"] <= key_eq <= e["max_key"])
                       and (e.get("bloom") is None
                            or _bloom_may_contain(e["bloom"], key_eq))]
-            if cols_between is not None:
+            if cols_between is not None and by_cols:
                 def _survives(e: dict) -> bool:
                     for c, (lo, hi) in cols_between.items():
                         rng = e.get("cols", {}).get(c)
@@ -301,16 +325,32 @@ def read_snapshot(spark: SparkSession, root: str,
                 fs = [e for e in fs if _survives(e)]
             return fs
 
-        files, tombs = _prune(files), _prune(tombs)
-        if not files:
-            continue
-        df = _read_files(spark, root, files)
-        if tombs:
-            dead = _read_files(spark, root, tombs).select(key).distinct()
-            # deleted-key sets are bounded per maintenance cycle (compact /
-            # merge materialize them away), so the anti-join broadcasts
-            df = df.join(F.broadcast(dead), key, "left_anti")
-        frames.append(df.withColumn("prediction_date", F.lit(pval)))
+        files = [e for e in _prune(entries) if not e.get("tombstone")]
+        # a layer whose keys cannot meet the key predicate hides no
+        # surviving row, because the survivors are re-filtered exactly
+        # below.  Column ranges do not prune layers: a layer's new value
+        # outside the range must still hide the old value inside it
+        layers = [e for e in _prune(entries, by_cols=False) if _seq(e)]
+        keys: dict[str, set] = {}
+        for s in sorted({_seq(e) for e in files}):
+            # the keys of every higher layer hide this group's rows.  They
+            # are read on the driver and applied as a literal filter, so
+            # the read stays one Spark job; layer key sets are bounded by
+            # the next compaction, which folds them away
+            dead = set()
+            for e in layers:
+                if _seq(e) > s:
+                    if e["path"] not in keys:
+                        keys[e["path"]] = _file_keys(Path(root) / e["path"],
+                                                     key)
+                    dead |= keys[e["path"]]
+            if key_eq is not None:
+                dead &= {key_eq}
+            df = _read_files(spark, root,
+                             [e for e in files if _seq(e) == s])
+            if dead:
+                df = df.filter(_outside(key, dead))
+            frames.append(df.withColumn("prediction_date", F.lit(pval)))
     if not frames:
         return spark.createDataFrame([], f"{key} bigint") \
             .withColumn("prediction_date", F.lit(None).cast("string"))
@@ -363,11 +403,12 @@ def _rewrite_partition(spark: SparkSession, root: str, partition: str,
     """Commit ``rewrite`` of one partition's rows; returns the version.
 
     Inside the commit loop, the partition's snapshot at the base version
-    (deletion vectors applied) goes to ``rewrite``, and the frame it
-    returns replaces the partition's files: the tombstones are
-    materialized away, and Bloom filters are kept when the replaced files
-    had them.  ``rewrite`` gets ``None`` when the partition has no live
-    files; a ``None`` result is a no-op."""
+    (layers applied) goes to ``rewrite``, and the frame it returns
+    replaces the partition's files: the layers are folded away, and Bloom
+    filters are kept when the replaced files had them.  ``rewrite`` gets
+    ``None`` when the partition has no live files; a ``None`` result, or
+    one with no rows (every row deleted), is a no-op — the unreferenced
+    empty file it wrote is left to ``vacuum``, like a lost race's."""
     def build(base: dict) -> dict:
         live = [e for e in base["partitions"].get(partition, [])
                 if not e.get("tombstone")]
@@ -377,11 +418,40 @@ def _rewrite_partition(spark: SparkSession, root: str, partition: str,
         out = rewrite(cur)
         if out is None:
             return {}
-        return {partition: _write_data_files(
-            out, root, key=key, stats_cols=stats_cols,
-            bloom_key=_had_blooms(live))}
+        files = _write_data_files(out, root, key=key, stats_cols=stats_cols,
+                                  bloom_key=_had_blooms(live))
+        return {partition: files} if any(e["rows"] for e in files) else {}
 
     return _retrying_commit(root, build)
+
+
+def _commit_layer(root: str, partition: str, layer) -> int:
+    """The one commit step of MERGE and DELETE: append ``layer(base)``'s
+    entries to the partition under the next sequence number.
+
+    The number is the partition's highest ``seq`` at the base version
+    plus one, computed inside the commit loop — a rebased retry therefore
+    lands above the winner's layer.  (It is not the version number: a
+    branch commit takes that from the global allocator only after the
+    build.)  A ``None`` layer is a no-op; a layer's empty files are left
+    out (a MERGE of no rows still commits a version)."""
+    def build(base: dict) -> dict:
+        entries = base["partitions"].get(partition, [])
+        files = layer(base)
+        if files is None:
+            return {}
+        seq = max(map(_seq, entries), default=0) + 1
+        return {partition: entries + [{**e, "seq": seq}
+                                      for e in files if e["rows"]]}
+
+    return _retrying_commit(root, build)
+
+
+def merge_layers(root: str, partition: str) -> int:
+    """MERGE layers of ``partition`` at the head that no ``compact`` or
+    ``cluster_zorder`` has folded yet."""
+    entries = read_manifest(root)["partitions"].get(partition, [])
+    return len({_seq(e) for e in entries if not e.get("tombstone")} - {0})
 
 
 def commit_overwrite_partition(df: DataFrame, root: str,
@@ -403,69 +473,54 @@ def merge_scores(df: DataFrame, root: str, partition: str,
     """Row-level MERGE (the reference's ON CONFLICT DO UPDATE): source rows
     replace same-key rows of the partition, others are inserted.
 
-    Merges against the partition's snapshot at the commit's base version,
-    so a rebased retry merges against the concurrent writer's rows instead
-    of clobbering them.  The source is pinned, because every retry
-    re-reads it.
-    """
-    src = df.localCheckpoint(eager=True)
-
-    def merged(cur: DataFrame | None) -> DataFrame:
-        if cur is None:
-            return src
-        keep = cur.join(src.select(key).distinct(), key, "left_anti")
-        return keep.unionByName(src.select(*keep.columns))
-
-    try:
-        return _rewrite_partition(df.sparkSession, root, partition, merged,
-                                  key=key)
-    finally:
-        domain.release_frames([src._jdf])
+    The source is written once, as it is, and committed as the
+    partition's next layer: its keys hide the older rows with the same
+    key, so the commit writes the micro-batch, not the partition.  A
+    rebased retry commits the same files above the winner's layer.  The
+    files get Bloom filters when the partition's files have them."""
+    head = read_manifest(root)["partitions"].get(partition, [])
+    files = _write_data_files(df, root, key=key,
+                              bloom_key=_had_blooms(head))
+    return _commit_layer(root, partition, lambda base: files)
 
 
 def delete_where(spark: SparkSession, root: str, partition: str,
                  predicate, key: str = "route_id") -> int:
-    """Row-level DELETE as merge-on-read deletion vectors (the Delta DV /
-    Iceberg positional-delete analog, key-grain): commit a TOMBSTONE file
-    listing the deleted keys instead of rewriting any data file.
+    """Row-level DELETE as a merge-on-read tombstone layer (the Iceberg
+    equality-delete analog): commit a file listing the deleted keys as
+    the partition's next layer instead of rewriting any data file.
 
     Why it matters at 100 TB: a GDPR-style delete of a handful of keys
-    from a date partition otherwise rewrites the whole partition
-    (``merge_scores``'s shape — O(partition)); a deletion vector writes
-    O(deleted keys) and defers the rewrite to the next ``compact`` /
-    ``merge_scores`` / ``cluster_zorder`` of that partition, all of which
-    materialize the deletes and drop the tombstones.  Readers apply the
-    tombstones as a broadcast anti-join (``read_snapshot``), so snapshot
+    from a date partition otherwise rewrites the whole partition —
+    O(partition); a tombstone writes O(deleted keys) and defers the
+    rewrite to the next ``compact`` / ``cluster_zorder`` of that
+    partition, which fold the layers away.  A later MERGE of a deleted
+    key sits above the tombstone and brings the key back.  Snapshot
     semantics, time travel, ``table_changes`` (the deletes surface as
     ``delete`` change rows) and vacuum's reference tracking all compose
-    unchanged.
+    unchanged; the tombstone gets a Bloom filter when the partition's
+    files have them, so point lookups of other keys prune it.
 
     ``predicate`` is a Column or SQL string evaluated against the
     partition's snapshot at the commit's base version (a rebased retry
     re-evaluates against the winner's rows).  No-op (current version
     returned) when the partition is missing or nothing matches."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    pinned: list = []
 
-    def build(base: dict) -> dict:
+    def tombstone(base: dict) -> list[dict] | None:
         entries = base["partitions"].get(partition, [])
         if not [e for e in entries if not e.get("tombstone")]:
-            return {}
-        snap = read_snapshot(spark, root, version=base["version"],
-                             partition=partition, key=key)
-        dead = snap.filter(pred).select(key).distinct() \
-                   .localCheckpoint(eager=True)
-        pinned.append(dead._jdf)
-        if dead.isEmpty():
-            return {}
-        tomb = [{**e, "tombstone": True}
-                for e in _write_data_files(dead, root, key=key)]
-        return {partition: entries + tomb}
+            return None
+        dead = (read_snapshot(spark, root, version=base["version"],
+                              partition=partition, key=key)
+                .filter(pred).select(key).distinct())
+        files = _write_data_files(dead, root, key=key,
+                                  bloom_key=_had_blooms(entries))
+        if not any(e["rows"] for e in files):
+            return None  # the empty file is left to vacuum
+        return [{**e, "tombstone": True} for e in files]
 
-    try:
-        return _retrying_commit(root, build)
-    finally:
-        domain.release_frames(pinned)
+    return _commit_layer(root, partition, tombstone)
 
 
 def vacuum(root: str, keep_versions: int = 1,
@@ -476,7 +531,7 @@ def vacuum(root: str, keep_versions: int = 1,
     Unreferenced files younger than ``grace_seconds`` (mtime) are KEPT: a
     concurrent writer materializes data files *before* publishing its
     manifest (the documented unreferenced-until-commit window, including
-    ``merge_scores`` retry attempts), so a zero-grace vacuum could delete
+    a MERGE's layer and the files of rewrite retries), so a zero-grace vacuum could delete
     files whose manifest is about to publish — the Delta/Iceberg retention
     threshold exists for exactly this.  Pass
     ``grace_seconds=0`` only when the caller holds exclusive access."""
@@ -533,10 +588,11 @@ def compact(spark: SparkSession, root: str, partition: str,
     Readers are never disturbed — they hold whichever manifest version they
     opened (old files persist until ``vacuum``).  The snapshot is read at
     the commit's base version, so a concurrent MERGE that wins the version
-    race makes this compaction rebase and rewrite on top of it.  A
-    partition without live files is a no-op returning the current version:
-    committing the empty-table fallback's degenerate schema over it would
-    replace the real schema.  Returns the committed version."""
+    race makes this compaction rebase and rewrite on top of it, folding
+    its layer too.  A partition without live files or without live rows
+    is a no-op returning the current version: committing the empty-table
+    fallback's degenerate schema, or one empty file, over it would replace
+    the real schema.  Returns the committed version."""
     return _rewrite_partition(
         spark, root, partition,
         lambda cur: None if cur is None else cur.coalesce(target_files))
@@ -574,11 +630,12 @@ def cluster_zorder(spark: SparkSession, root: str, partition: str,
     by the Morton interleave of ``cols`` and commit the swap atomically,
     recording per-file min/max for every clustered column in the manifest.
 
-    Generalizes ``sinks.write_zordered`` (fixed lat/lon geo-bounds, plain
-    directory write, row-group-level skipping only) to arbitrary column
-    sets with data-driven bounds INSIDE the transactional format, where
-    the manifest's per-column ranges let ``read_snapshot(cols_between=…)``
-    prune whole files without opening a footer.
+    Any column set works: the bounds come from the data, and the layout
+    lives INSIDE the transactional format, where the manifest's
+    per-column ranges let ``read_snapshot(cols_between=…)`` prune whole
+    files without opening a footer.  Like ``compact`` it folds the
+    partition's MERGE and DELETE layers away, and a partition without
+    live rows is a no-op returning the current version.
 
     Why it matters at 100 TB: ``compact``/linear sort makes ONE column's
     per-file ranges tight — a 2-D predicate (lat box x lon box, the radius
@@ -596,6 +653,8 @@ def cluster_zorder(spark: SparkSession, root: str, partition: str,
             return None
         agg = cur.agg(*[f(F.col(c)).alias(f"{f.__name__}_{c}")
                         for c in cols for f in (F.min, F.max)]).collect()[0]
+        if any(v is None for v in agg):  # no live row to quantize
+            return None
         bounds = [(float(agg[f"min_{c}"]), float(agg[f"max_{c}"]))
                   for c in cols]
         z = _zvalue([F.col(c) for c in cols], bounds)
@@ -618,9 +677,10 @@ def table_changes(spark: SparkSession, root: str, v_from: int, v_to: int,
 
     Two-level pruning before any row comparison:
     * partitions whose manifest file lists are IDENTICAL between the two
-      versions are skipped outright (a merge/compact/zorder rewrites the
-      partitions it touches, so an unchanged file list proves unchanged
-      rows) — the manifest diff is metadata-only;
+      versions are skipped outright (every writer changes the file list
+      of the partitions it touches — a MERGE or DELETE appends a layer,
+      a compact/zorder rewrites — so an unchanged file list proves
+      unchanged rows) — the manifest diff is metadata-only;
     * within a changed partition, the old and new snapshots are compared
       by a full outer join on ``key``: new-only keys are inserts,
       old-only keys are deletes, and both-sides keys are updates only

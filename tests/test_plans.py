@@ -328,21 +328,29 @@ def test_stratified_sample_broadcasts_rates(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _manifest_files(df, partition: str) -> tuple[set, set]:
+    """(files ``df`` scans, files of ``partition`` in the head manifest
+    of the txlog table those files belong to)."""
+    from safeascent_spark import txlog
+    scanned = {f.removeprefix("file:") for f in df.inputFiles()}
+    root = next(iter(scanned)).split("/data/")[0]
+    listed = {f"{root}/{e['path']}" for e in
+              txlog.read_manifest(root)["partitions"][partition]}
+    return scanned, listed
+
+
 def test_score_sink_partition_pruning(spark, tmp_path):
-    """The date-partitioned score sink must prune partitions on read: a
-    single-date read lists one partition, not the whole table."""
-    from safeascent_spark import sinks
+    """The date-partitioned score table must prune partitions on read: a
+    single-date read scans that date's manifest files, not the table."""
+    from safeascent_spark import txlog
     from safeascent_spark.operators import batch as B
     path = str(tmp_path / "scores")
     for d in ("2024-06-15", "2024-06-16"):
-        sinks.write_scores(B.batch_scores_df(spark, SF_SMOKE), path, d)
-    df = spark.read.parquet(path).filter(F.col("prediction_date") == "2024-06-15")
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"PartitionFilters: \[[^\]]*prediction_date[^\]]* = 2024-06-15[^\]]*\]",
-                  plan)
-    assert m, plan[:2000]
-    # (inputFiles() lists the whole relation pre-pruning, so the plan's
-    # PartitionFilters entry — not the file list — is the pruning evidence)
+        txlog.commit_overwrite_partition(B.batch_scores_df(spark, SF_SMOKE),
+                                         path, d)
+    df = txlog.read_snapshot(spark, path, partition="2024-06-15")
+    scanned, listed = _manifest_files(df, "2024-06-15")
+    assert scanned == listed, (scanned, listed)
     assert df.count() == B.batch_scores_df(spark, SF_SMOKE).count()
 
 
@@ -880,31 +888,30 @@ def test_plan_probe_live_invariants(spark):
 
 
 def test_s8_probe_partition_prunes_and_broadcasts_the_mget_batch(spark):
-    """The serving read must prune to ONE prediction_date partition at
-    the scan (not post-filter both dates) and semi-join the bounded
-    MGET id batch via broadcast hash join."""
-    from safeascent_spark import planprobes
+    """The serving read must scan ONE prediction_date's manifest files
+    (not both dates' files, post-filtered) and semi-join the bounded MGET
+    id batch via broadcast hash join."""
+    from safeascent_spark import domain, planprobes
 
     with planprobes.all_probes()["s8_serving_pipeline"](
             spark, SF_SMOKE) as df:
         plan = plan_of(df)
-    assert re.search(r"PartitionFilters: \[.*prediction_date.* = "
-                     r"2024-06-15", plan), plan
+        scanned, listed = _manifest_files(df, domain.PRED_DATE)
+    assert scanned == listed, (scanned, listed)
     assert re.search(r"BroadcastHashJoin .*LeftSemi", plan), plan
 
 
-def test_s9_probe_resolves_deltas_with_keyed_windows_not_global_sort(spark):
-    """Merge-on-read latest-wins must ride route_id-partitioned windows
-    (with the WindowGroupLimit map-side truncation) — never an
-    unpartitioned window or a join back to the corpus."""
+def test_s9_probe_has_no_window_or_join_blowup(spark):
+    """Upserted rows shadow the base through literal key filters: the
+    upsert/purge/read pipeline needs no latest-wins Window, and no
+    SortMergeJoin or CartesianProduct."""
     from safeascent_spark import planprobes
 
     with planprobes.all_probes()["s9_survivor_pipeline"](
             spark, SF_SMOKE) as df:
         plan = plan_of(df)
-    assert "WindowGroupLimit" in plan
-    specs = re.findall(r"windowspecdefinition\((\w+#\d+)", plan)
-    assert specs and all(s.startswith("route_id#") for s in specs), specs
+    for op in ("Window", "SortMergeJoin", "CartesianProduct"):
+        assert n_ops(plan, op) == 0, (op, plan[:2000])
 
 
 def test_ivf_incremental_plan_shape(spark):
@@ -924,18 +931,15 @@ def test_ivf_incremental_plan_shape(spark):
     assert specs and all(s.startswith("vec_id#") for s in specs), specs
 
 
-def test_compaction_probe_reads_deltas_in_one_scan(spark):
-    """The pre-compaction served read must scan the delta root ONCE
-    (partition discovery carries delta_seq), resolve latest-wins with a
-    route_id-keyed window, and never go cartesian."""
+def test_compaction_probe_has_no_window_or_join_blowup(spark):
+    """The pre-compaction served read with two unfolded MERGE layers is
+    one file group per layer under literal key filters: no Window,
+    SortMergeJoin or CartesianProduct."""
     from safeascent_spark import planprobes
 
     with planprobes.all_probes()["compaction_before_frame"](
             spark, SF_SMOKE) as df:
         plan = plan_of(df)
-    assert n_ops(plan, "CartesianProduct") == 0
-    assert n_ops(plan, "SortMergeJoin") == 0
-    specs = re.findall(r"windowspecdefinition\((\w+#\d+)", plan)
-    assert specs and all(s.startswith("route_id#") for s in specs), specs
-    # base partition scan + ONE delta-root scan (constant in #deltas)
-    assert n_ops(plan, "Scan parquet") == 2, plan[:2000]
+    for op in ("Window", "SortMergeJoin", "CartesianProduct"):
+        assert n_ops(plan, op) == 0, (op, plan[:2000])
+    assert n_ops(plan, "Scan parquet") == 3, plan[:2000]

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 import tempfile
 from pathlib import Path
 
-from safeascent_spark import sinks
+from safeascent_spark import txlog
 from safeascent_spark.operators import multimodal as MM
 from safeascent_spark.operators import scoring
 from safeascent_spark.streaming import refresh
@@ -16,35 +16,42 @@ from tests.conftest import SF_SMOKE
 
 
 def test_score_sink_roundtrip_and_retention(spark):
+    """The score sink is the txlog table: re-committing a date is
+    idempotent, a serving read sees one date's files only, and retention
+    is one commit that maps the purged date to no files."""
     with tempfile.TemporaryDirectory() as tmp:
         path = str(Path(tmp) / "scores")
         df = scoring.risk_scores_df(spark, SF_SMOKE)
-        sinks.write_scores(df, path, "2024-06-15")
-        sinks.write_scores(df, path, "2024-06-16")
+        txlog.commit_overwrite_partition(df, path, "2024-06-15")
+        txlog.commit_overwrite_partition(df, path, "2024-06-16")
         # idempotent re-write of one date must not duplicate
-        sinks.write_scores(df, path, "2024-06-16")
-        assert sinks.list_partitions(path) == ["2024-06-15", "2024-06-16"]
-
+        txlog.commit_overwrite_partition(df, path, "2024-06-16")
         n = df.count()
-        got = sinks.read_scores(spark, path, "2024-06-16")
+        got = txlog.read_snapshot(spark, path, partition="2024-06-16")
         assert got.count() == n
+        files = {f"{path}/{e['path']}" for e in
+                 txlog.read_manifest(path)["partitions"]["2024-06-16"]}
+        assert {f.removeprefix("file://") for f in got.inputFiles()} \
+            <= files
 
-        # point-lookup semi-join
-        some = sinks.read_scores(spark, path, "2024-06-15", route_ids=[0, 1, 2])
-        assert some.count() == 3
-
-        removed = sinks.purge_old_partitions(path, keep_dates={"2024-06-16"})
-        assert removed == ["2024-06-15"]
-        assert sinks.list_partitions(path) == ["2024-06-16"]
+        v = txlog._retrying_commit(path, lambda base: {"2024-06-15": []})
+        assert txlog.read_manifest(path)["partitions"]["2024-06-15"] == []
+        assert txlog.read_snapshot(spark, path).count() == n
+        # the purged date stays readable by time travel until vacuum
+        assert txlog.read_snapshot(spark, path, version=v - 1,
+                                   partition="2024-06-15").count() == n
 
 
 def test_upsert_merge_on_read_and_compaction(spark):
+    """Row-level upserts are MERGE layers: the latest layer wins per key,
+    other dates are untouched, and compaction folds the layers into plain
+    files with the same rows."""
     with tempfile.TemporaryDirectory() as tmp:
         path = str(Path(tmp) / "scores")
         df = scoring.risk_scores_df(spark, SF_SMOKE).localCheckpoint(eager=True)
         n = df.count()
-        sinks.write_scores(df, path, "2024-06-15")
-        sinks.write_scores(df, path, "2024-06-16")
+        txlog.commit_overwrite_partition(df, path, "2024-06-15")
+        txlog.commit_overwrite_partition(df, path, "2024-06-16")
 
         # row-level upsert into an existing date: change 2 rows, add 1 new
         changed = (df.filter(F.col("route_id") < 2)
@@ -53,27 +60,28 @@ def test_upsert_merge_on_read_and_compaction(spark):
             [(10_000_000, 1.5, "green", 0)],
             "route_id bigint, risk_score double, color_code string, "
             "num_contributing int")
-        seq = sinks.upsert_scores(changed.unionByName(added), path, "2024-06-16")
-        assert seq == 1
+        txlog.merge_scores(changed.unionByName(added), path, "2024-06-16")
 
-        cur = sinks.read_scores_current(spark, path, "2024-06-16")
+        cur = txlog.read_snapshot(spark, path, partition="2024-06-16")
         assert cur.count() == n + 1
         got = {r.route_id: r.risk_score for r in
                cur.filter(F.col("route_id").isin(0, 1, 10_000_000)).collect()}
         assert got == {0: 99.0, 1: 99.0, 10_000_000: 1.5}
-        # a second upsert of the same key wins over the first (latest seq)
-        assert sinks.upsert_scores(
+        # a second upsert of the same key wins over the first (latest layer)
+        txlog.merge_scores(
             changed.limit(1).withColumn("risk_score", F.lit(50.0)),
-            path, "2024-06-16") == 2
-        cur2 = sinks.read_scores_current(spark, path, "2024-06-16")
+            path, "2024-06-16")
+        cur2 = txlog.read_snapshot(spark, path, partition="2024-06-16")
         assert cur2.filter(F.col("route_id") == 0).collect()[0].risk_score == 50.0
         # the untouched date still reads pure base
-        assert sinks.read_scores_current(spark, path, "2024-06-15").count() == n
+        assert txlog.read_snapshot(
+            spark, path, partition="2024-06-15").count() == n
 
-        # compaction folds deltas into the base partition and clears them
-        assert sinks.compact_scores(spark, path, "2024-06-16") == 2
-        assert sinks.compact_scores(spark, path, "2024-06-16") == 0  # idempotent
-        after = sinks.read_scores(spark, path, "2024-06-16")
+        # compaction folds the layers into plain files
+        assert txlog.merge_layers(path, "2024-06-16") == 2
+        txlog.compact(spark, path, "2024-06-16")
+        assert txlog.merge_layers(path, "2024-06-16") == 0
+        after = txlog.read_snapshot(spark, path, partition="2024-06-16")
         assert after.count() == n + 1
         assert after.filter(F.col("route_id") == 0).collect()[0].risk_score == 50.0
 
@@ -305,89 +313,44 @@ def test_streaming_dedup_within_watermark(spark):
     assert spark.table("dup_sink").count() == 2 * n_events
 
 
-def test_zorder_layout_tightens_rowgroup_stats(spark, tmp_path):
-    """The Z-ordered layout must make per-row-group lat AND lon ranges
-    dramatically tighter than an unclustered write — that tightness is
-    exactly what parquet min/max row-group skipping prunes on — while a
-    bbox read returns identical rows."""
-    import glob
-
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
-
-    from safeascent_spark import domain, sinks
-    from safeascent_spark.kernels import bbox_contains
-
-    loc = domain.locations_df(spark, "/root/testdata/sf0.01")
-    rows = loc.crossJoin(spark.range(50).select(F.col("id").alias("rep"))) \
-              .select("location_id", "rep", "latitude", "longitude")
-    naive, zord = str(tmp_path / "naive"), str(tmp_path / "zord")
-    rows.repartition(16).write.parquet(naive)
-    # 16 range partitions = the top 4 Morton bits = a 4x4 spatial tiling,
-    # so BOTH axes' per-tile spans drop to ~1/4 of the domain
-    sinks.write_zordered(rows, zord, n_files=16)
-
-    def avg_spread(path, col):
-        spreads, n = 0.0, 0
-        for f in glob.glob(path + "/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            idx = {md.schema.column(i).name: i
-                   for i in range(md.num_columns)}[col]
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx).statistics
-                spreads += st.max - st.min
-                n += 1
-        return spreads / n
-
-    for col in ("latitude", "longitude"):
-        assert avg_spread(zord, col) < 0.5 * avg_spread(naive, col), col
-
-    box = bbox_contains(35.0, -115.0, 600.0, "latitude", "longitude")
-    a = sorted((r.location_id, r.rep) for r in
-               spark.read.parquet(zord).filter(box).collect())
-    b = sorted((r.location_id, r.rep) for r in
-               spark.read.parquet(naive).filter(box).collect())
-    assert a == b and len(a) > 0
-
-
 def test_upsert_two_writer_contention(spark):
-    """S9 race (VERDICT r3 item 5): two concurrent upserts of the SAME date
-    must claim distinct delta sequences (atomic mkdir, not listing-max+1)
-    and both survive merge-on-read.  Threads synchronize on a barrier so
-    both directory listings happen before either mkdir."""
+    """S9 race (VERDICT r3 item 5): two concurrent upserts of the SAME
+    date both build against the same base version; the loser of the
+    publish race rebases, and both layers survive.  Threads synchronize on
+    a barrier so both builds finish before either publishes."""
     import threading
+
     with tempfile.TemporaryDirectory() as tmp:
         path = str(Path(tmp) / "scores")
         base = spark.createDataFrame(
             [(1, 1.0), (2, 2.0)], "route_id bigint, risk_score double")
-        sinks.write_scores(base, path, "2024-06-15")
+        txlog.commit_overwrite_partition(base, path, "2024-06-15")
         d1 = spark.createDataFrame([(1, 11.0)],
                                    "route_id bigint, risk_score double")
         d2 = spark.createDataFrame([(2, 22.0)],
                                    "route_id bigint, risk_score double")
         barrier = threading.Barrier(2)
-        seqs: list[int] = []
-        orig = sinks._delta_root
+        orig, tries, versions = txlog._publish, [], []
 
-        def contended(df):
-            def patched(path_, date_):
-                root = orig(path_, date_)
-                root.mkdir(parents=True, exist_ok=True)
-                barrier.wait(timeout=30)  # both list before either claims
-                return root
-            sinks._delta_root = patched
-            try:
-                seqs.append(sinks.upsert_scores(df, path, "2024-06-15"))
-            finally:
-                sinks._delta_root = orig
+        def contended(root, manifest):
+            tries.append(manifest["version"])
+            if len(tries) <= 2:
+                barrier.wait(timeout=60)  # both built on the same base
+            return orig(root, manifest)
 
-        t1 = threading.Thread(target=contended, args=(d1,))
-        t2 = threading.Thread(target=contended, args=(d2,))
-        t1.start(); t2.start(); t1.join(30); t2.join(30)
-        assert sorted(seqs) == [1, 2], seqs
+        txlog._publish = contended
+        try:
+            threads = [threading.Thread(target=lambda d=d: versions.append(
+                txlog.merge_scores(d, path, "2024-06-15"))) for d in (d1, d2)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(60)
+        finally:
+            txlog._publish = orig
+        assert tries[:2] == [2, 2] and sorted(versions) == [2, 3], tries
         got = {r.route_id: r.risk_score
-               for r in sinks.read_scores_current(
-                   spark, path, "2024-06-15").collect()}
+               for r in txlog.read_snapshot(spark, path).collect()}
         assert got == {1: 11.0, 2: 22.0}, got
 
 

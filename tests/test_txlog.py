@@ -43,6 +43,10 @@ def test_merge_is_latest_wins_insert_or_update(spark, tmp_path):
 _IN_FLIGHT = {
     "merge_scores": (lambda spark, root: T.merge_scores(
         _rows(spark, [(1, 11.0)]), root, D), {1: 11.0, 7: 70.0}),
+    # the rebased layer must sit ABOVE the interloper's layer of the same
+    # key: its sequence number is taken from the base it finally commits on
+    "merge_same_key": (lambda spark, root: T.merge_scores(
+        _rows(spark, [(7, 77.0)]), root, D), {1: 10.0, 7: 77.0}),
     "compact": (lambda spark, root: T.compact(spark, root, D, target_files=1),
                 {1: 10.0, 7: 70.0}),
     "cluster_zorder": (lambda spark, root: T.cluster_zorder(
@@ -306,9 +310,9 @@ def test_bloom_point_lookup_prunes_hash_distributed_files(spark, tmp_path):
 
 
 def test_bloom_survives_merge_and_exactness_under_fp(spark, tmp_path):
-    """MERGE and compaction keep the Bloom filters of the files they
-    replace, so a point lookup after them still opens fewer files than the
-    manifest lists.  The bloom is advisory: a surviving false-positive file
+    """A MERGE layer gets Bloom filters when the partition's files have
+    them, and compaction keeps them, so a point lookup after either still
+    opens fewer files than the manifest lists.  The bloom is advisory: a surviving false-positive file
     only costs a read — the exact key filter still applies.  Probe every
     key and assert each returns exactly its own row (no fp can leak rows)."""
     root = str(tmp_path / "t")
@@ -451,8 +455,8 @@ def test_tombstoned_partition_reads_same_rows(spark, tmp_path):
 
 
 def test_writers_release_their_checkpoints(spark, tmp_path):
-    """No txlog writer leaves a checkpoint pinned once its commit returns:
-    MERGE pins its source, delete_where its deleted keys."""
+    """No txlog writer leaves a checkpoint pinned once its commit
+    returns."""
     pinned = lambda: spark.sparkContext._jsc.getPersistentRDDs().size()
     root = str(tmp_path / "t")
     T.commit_overwrite_partition(
@@ -469,3 +473,179 @@ def test_writers_release_their_checkpoints(spark, tmp_path):
     want = {i: float(i) for i in range(20)}
     want[3] = 30.0
     assert _snap(spark, root) == want
+
+
+def test_deleted_key_lookup_and_scan_run_one_job(spark, tmp_path):
+    """A tombstone's keys are applied as a literal filter, not a
+    broadcast anti-join, and it carries a Bloom filter when the
+    partition's files do: after a delete, a lookup of the deleted key, a
+    lookup of a live key and a partition scan each run one job."""
+    from pyspark.sql import functions as F
+    root = str(tmp_path / "t")
+    df = (spark.range(0, 200)
+          .select(F.col("id").alias("route_id"),
+                  (F.col("id") * 1.0).alias("risk_score"))
+          .repartition(2, "route_id"))
+    T.commit_overwrite_partition(df, root, D, bloom_key=True)
+    T.delete_where(spark, root, D, "route_id = 5")
+    tombs = [e for e in T.read_manifest(root)["partitions"][D]
+             if e.get("tombstone")]
+    assert tombs and all("bloom" in e for e in tombs)
+    got = []
+    assert _jobs(spark, lambda: got.extend(
+        T.read_snapshot(spark, root, key_eq=5).collect())) == 1
+    assert got == []
+    assert _jobs(spark, lambda: got.extend(
+        T.read_snapshot(spark, root, key_eq=6).collect())) == 1
+    assert [(r.route_id, r.risk_score) for r in got] == [(6, 6.0)]
+    assert _jobs(spark, lambda: got.extend(
+        T.read_snapshot(spark, root, partition=D).collect())) == 1
+    assert sorted(r.route_id for r in got[1:]) \
+        == [i for i in range(200) if i != 5]
+
+
+def _strip_seqs(root, version):
+    """Rewrite manifest ``version`` as written before layers were
+    numbered."""
+    m = T.read_manifest(root, version)
+    for entries in m["partitions"].values():
+        for e in entries:
+            e.pop("seq", None)
+    T._manifest_path(root, version).write_text(json.dumps(m))
+
+
+def test_manifest_without_seqs_reads_same_rows(spark, tmp_path):
+    """Tombstones committed before layers were numbered hide their keys
+    in every data file of the partition: a manifest with its ``seq``
+    fields stripped reads the same rows, and a MERGE on top of it still
+    lands above the old tombstones."""
+    root = str(tmp_path / "t")
+    T.commit_overwrite_partition(
+        _rows(spark, [(i, float(i)) for i in range(20)]).repartition(2),
+        root, D, bloom_key=True)
+    T.delete_where(spark, root, D, "route_id < 3")
+    v = T.delete_where(spark, root, D, "route_id % 5 = 4")
+    want = {i: float(i) for i in range(20) if i >= 3 and i % 5 != 4}
+    assert _snap(spark, root) == want
+    _strip_seqs(root, v)
+    assert not any("seq" in e
+                   for e in T.read_manifest(root)["partitions"][D])
+    assert _snap(spark, root) == want
+    assert T.read_snapshot(spark, root, key_eq=9).count() == 0
+    assert T.read_snapshot(spark, root, key_between=(0, 5)).count() == 2
+    T.merge_scores(_rows(spark, [(1, -1.0), (9, -9.0)]), root, D)
+    want.update({1: -1.0, 9: -9.0})
+    assert _snap(spark, root) == want
+
+
+@pytest.mark.parametrize("where", ["plain", "branch"])
+def test_layers_match_dict_model(spark, tmp_path, where):
+    """MERGE -> DELETE -> MERGE -> compact against a Python dict model.
+    ``branch``: refs exist, so every commit goes through the branch
+    commit path, and commits on a side branch make main's version
+    numbers skip between its layers; the side branch stays untouched."""
+    root = str(tmp_path / "t")
+    T.commit_overwrite_partition(
+        _rows(spark, [(i, float(i)) for i in range(10)]).repartition(2),
+        root, D, bloom_key=True)
+    model = {i: float(i) for i in range(10)}
+    side = {}
+
+    def interleave(i):
+        if where == "branch":
+            T.commit_overwrite_partition(
+                _rows(spark, [(100 + i, 0.0)]), root, "side-" + D,
+                branch="side")
+            side.clear()
+            side[100 + i] = 0.0
+
+    if where == "branch":
+        T.create_branch(root, "side")
+    steps = [
+        lambda: T.merge_scores(
+            _rows(spark, [(2, 20.0), (11, 11.0), (12, 12.0)]), root, D),
+        lambda: T.delete_where(spark, root, D, "route_id IN (2, 3, 12)"),
+        lambda: T.merge_scores(
+            _rows(spark, [(3, 30.0), (4, 40.0)]), root, D),
+        lambda: T.compact(spark, root, D, target_files=1),
+    ]
+    effects = [
+        lambda: model.update({2: 20.0, 11: 11.0, 12: 12.0}),
+        lambda: [model.pop(k) for k in (2, 3, 12)],
+        lambda: model.update({3: 30.0, 4: 40.0}),
+        lambda: None,
+    ]
+    for i, (step, effect) in enumerate(zip(steps, effects)):
+        step()
+        effect()
+        interleave(i)
+        assert _snap(spark, root) == model, i
+        for k in (2, 3, 4, 11, 12):
+            got = {r.route_id: r.risk_score for r in
+                   T.read_snapshot(spark, root, key_eq=k).collect()}
+            assert got == ({k: model[k]} if k in model else {}), (i, k)
+    entries = T.read_manifest(root)["partitions"][D]
+    assert not any("seq" in e or e.get("tombstone") for e in entries)
+    if where == "branch":
+        got = {r.route_id: r.risk_score for r in
+               T.read_snapshot(spark, root, ref="side",
+                               partition="side-" + D).collect()}
+        assert got == side
+
+
+def test_fully_deleted_partition_compact_and_zorder_are_noops(spark,
+                                                              tmp_path):
+    """A partition whose rows are all deleted has live files and no live
+    rows: clustering has no bounds to quantize against and compaction
+    would publish one empty file, so both return the current version."""
+    root = str(tmp_path / "t")
+    T.commit_overwrite_partition(_rows(spark, [(1, 10.0), (2, 20.0)]),
+                                 root, D)
+    v = T.delete_where(spark, root, D, "true")
+    before = T.read_manifest(root)
+    assert T.cluster_zorder(spark, root, D, cols=("risk_score",)) == v
+    assert T.compact(spark, root, D) == v
+    assert T.current_version(root) == v
+    assert T.read_manifest(root) == before
+    assert _snap(spark, root) == {}
+
+
+def test_column_ranges_never_prune_a_shadowing_layer(spark, tmp_path):
+    """A MERGE that moves a key's value out of a ``cols_between`` range
+    must still hide the old in-range value: column ranges prune data
+    files, never the layers whose keys shadow them — even when a layer
+    entry records column ranges."""
+    root = str(tmp_path / "t")
+    T.commit_overwrite_partition(
+        _rows(spark, [(i, float(i)) for i in range(10)]), root, D)
+    T.cluster_zorder(spark, root, D, cols=("risk_score",), target_files=2)
+    v = T.merge_scores(_rows(spark, [(3, 99.0)]), root, D)
+    box = {"risk_score": (0.0, 5.0)}
+    want = [0, 1, 2, 4, 5]
+    got = lambda: sorted(r.route_id for r in
+                         T.read_snapshot(spark, root, cols_between=box)
+                         .collect())
+    assert got() == want
+    m = T.read_manifest(root, v)
+    for e in m["partitions"][D]:
+        if "seq" in e:
+            e["cols"] = {"risk_score": [99.0, 99.0]}
+    T._manifest_path(root, v).write_text(json.dumps(m))
+    assert got() == want
+
+
+def test_string_keyed_layers(spark, tmp_path):
+    """Layers shadow by any key type: a string key takes the literal
+    ``isin`` filter instead of the bigint SQL list."""
+    root = str(tmp_path / "t")
+    rows = lambda p: spark.createDataFrame(p, "sku string, qty int")
+    T.commit_overwrite_partition(rows([("a", 1), ("b", 2), ("c'd", 3)]),
+                                 root, D)
+    T.merge_scores(rows([("b", 20), ("e", 5)]), root, D, key="sku")
+    T.delete_where(spark, root, D, "sku = 'c''d'", key="sku")
+    got = {r.sku: r.qty for r in
+           T.read_snapshot(spark, root, key="sku").collect()}
+    assert got == {"a": 1, "b": 20, "e": 5}
+    assert [r.qty for r in
+            T.read_snapshot(spark, root, key="sku", key_eq="b").collect()] \
+        == [20]

@@ -10,8 +10,8 @@ tool times each phase separately, interleaved best-of-N per SF:
   * upstream  — materialize the capped score table (the session-memoized
                 checkpoint, evicted first so each run pays it once)
   * writes    — s8: 2 date partitions; s9: 3 partitions + row-level
-                upsert delta + retention purge
-  * readback  — s8: partition-pruned broadcast-MGET serving read;
+                MERGE layer + retention purge (all txlog commits)
+  * readback  — s8: one date's files + broadcast-MGET serving read;
                 s9: merge-on-read survivor aggregate
 
 Usage:
@@ -86,7 +86,6 @@ def main() -> None:
                           .write.format("noop").mode("overwrite").save()))
             finally:
                 shutil.rmtree(tmp9, ignore_errors=True)
-                shutil.rmtree(tmp9 + "__deltas", ignore_errors=True)
 
     a, b = sfs
     ratios = {ph: (round(best[b][ph] / best[a][ph], 2)
