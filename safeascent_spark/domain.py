@@ -31,6 +31,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Fixed "current date" every scoring query predicts for (must be a constant
 # so Spark and DuckDB agree; the reference uses date.today()).
@@ -191,6 +192,78 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return cache[key]
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Small driver-side ``rows`` as a JVM local relation: one generated
+    ``VALUES`` query with exact literals, so the frame never needs a
+    Python worker.
+
+    ``spark.createDataFrame(<python rows>)`` builds a ``PythonRDD``: every
+    time the frame executes, ``defaultParallelism`` Python-worker tasks
+    re-serialize the rows.  A ``LocalRelation`` runs in the JVM, carries
+    exact size statistics and folds into the plan.  ``schema`` is a DDL
+    string or a ``StructType``; the result has its column types and
+    nullability.  Parsing costs ~30 µs per row, so this is for dimension-
+    sized row lists, not bulk data."""
+    st = schema if isinstance(schema, T.StructType) \
+        else T._parse_datatype_string(schema)
+    fields = st.fields
+    rows = [tuple(r) for r in rows]
+    if not rows:
+        # one placeholder row, filtered out: VALUES cannot be empty
+        body = [tuple(None if f.nullable else _ZERO[type(f.dataType)]
+                      for f in fields)]
+    else:
+        body = rows
+    cells = [[_sql_literal(v, f.dataType) for v, f in zip(r, fields)]
+             for r in body]
+    for i, f in enumerate(fields):
+        has_null = any(r[i] is None for r in body)
+        if has_null and not f.nullable:
+            raise ValueError(f"local_frame: null in non-nullable {f.name!r}")
+        if f.nullable and not has_null:
+            # a VALUES column is nullable iff one of its cells is
+            cells[0][i] = f"IF(TRUE, {cells[0][i]}, NULL)"
+    names = ", ".join("`" + f.name.replace("`", "``") + "`" for f in fields)
+    values = ", ".join("(" + ", ".join(c) + ")" for c in cells)
+    where = "" if rows else " WHERE FALSE"
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names}){where}")
+
+
+# placeholder value per type for the empty frame's non-nullable columns
+_ZERO = {T.StringType: "", T.IntegerType: 0, T.LongType: 0,
+         T.DoubleType: 0.0, T.ArrayType: []}
+# integer type -> (value bits, SQL literal suffix)
+_INTEGRAL = {T.IntegerType: (31, ""), T.LongType: (63, "L")}
+
+
+def _sql_literal(v, t) -> str:
+    """Spark SQL text of ``v`` as a value of type ``t``: the same value
+    and type, and non-null unless ``v`` is None."""
+    if v is None:
+        return f"CAST(NULL AS {t.simpleString()})"
+    if isinstance(t, T.StringType):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(t, T.DoubleType):
+        v = float(v)
+        if math.isfinite(v):
+            return f"{v!r}D"
+        # a string cast is nullable; coalesce keeps the column non-null
+        return f"coalesce(CAST('{v}' AS DOUBLE), 0D)"
+    if type(t) in _INTEGRAL:
+        bits, suffix = _INTEGRAL[type(t)]
+        if not -(1 << bits) <= v < (1 << bits):
+            raise ValueError(f"local_frame: {v} out of range for "
+                             f"{t.simpleString()}")
+        return f"{int(v)}{suffix}"
+    if isinstance(t, T.ArrayType):
+        # the cast types the array, empty or not; SQL has no NOT NULL
+        # element type to cast to
+        if t.containsNull:
+            items = ", ".join(_sql_literal(x, t.elementType) for x in v)
+            return f"CAST(array({items}) AS {t.simpleString()})"
+    raise TypeError(f"local_frame: unsupported type {t.simpleString()}")
+
+
 def ts_to_nanos(df: DataFrame) -> DataFrame:
     """Normalize an event-time ``ts`` column to the canonical ns-long form.
 
@@ -205,7 +278,6 @@ def ts_to_nanos(df: DataFrame) -> DataFrame:
     """
     if "ts" not in df.columns:
         return df
-    from pyspark.sql import types as T
     dt = df.schema["ts"].dataType
     if isinstance(dt, T.TimestampNTZType):
         return df.withColumn(

@@ -88,8 +88,8 @@ def domain_grade_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         distinct = [x[0] for x in r.union(a).distinct().collect()
                     if x[0] is not None]
         rows = [(g, py_parse_grade(g)) for g in sorted(distinct)]
-        return spark.createDataFrame(
-            rows, "grade string, difficulty double").cache()
+        return domain.local_frame(
+            spark, rows, "grade string, difficulty double").cache()
     return domain.session_memo(spark, "grade_dim", sf_dir, build)
 
 
@@ -109,7 +109,8 @@ def grade_difficulty_join(df: DataFrame, grade_col: str, out_col: str,
         rows = [(g, py_parse_grade(g)) for g in distinct]
         if not rows:
             return df.withColumn(out_col, F.lit(None).cast("double"))
-        dim = spark.createDataFrame(rows, "grade string, difficulty double")
+        from . import domain
+        dim = domain.local_frame(spark, rows, "grade string, difficulty double")
     dim = dim.select(F.col("grade").alias(grade_col),
                      F.col("difficulty").alias(out_col))
     return df.join(F.broadcast(dim), grade_col, "left")

@@ -370,8 +370,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str,
     model, corpus = ivf_assignments(spark, sf_dir)
     centroids = [(ci, [float(x) for x in c])
                  for ci, c in enumerate(model.clusterCenters())]
-    cent_df = F.broadcast(corpus.sparkSession.createDataFrame(
-        centroids, "cell int, centroid array<double>"))
+    cent_df = F.broadcast(domain.local_frame(
+        spark, centroids, "cell int, centroid array<double>"))
 
     q = (corpus.filter(F.col("vec_id") < N_QUERIES)
                .select(F.col("vec_id").alias("query_id"),
@@ -421,8 +421,9 @@ def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms = {ci: float(sum(x * x for x in c) ** 0.5)
              for ci, c in enumerate(model.clusterCenters())}
     sizes = corpus.groupBy("cell").agg(F.count(F.lit(1)).alias("n_vectors"))
-    norm_df = F.broadcast(corpus.sparkSession.createDataFrame(
-        [(ci, n) for ci, n in norms.items()], "cell int, centroid_norm double"))
+    norm_df = F.broadcast(domain.local_frame(
+        spark, [(ci, n) for ci, n in norms.items()],
+        "cell int, centroid_norm double"))
     return (sizes.join(norm_df, "cell")
                  .select("cell", "n_vectors",
                          F.round("centroid_norm", 4).alias("centroid_norm"))
@@ -580,7 +581,8 @@ def pq_codebooks(spark: SparkSession, sf_dir: str):
                   .drop("_f")
         books += [(m, ci, [float(x) for x in c])
                   for ci, c in enumerate(model.clusterCenters())]
-    book_df = spark.createDataFrame(books, "m int, code int, sub array<double>")
+    book_df = domain.local_frame(spark, books,
+                                 "m int, code int, sub array<double>")
     return book_df, df
 
 
@@ -681,8 +683,8 @@ def filtered_ivf_candidates(spark: SparkSession, sf_dir: str,
     model, corpus = ivf_assignments(spark, sf_dir)
     centroids = [(ci, [float(x) for x in c])
                  for ci, c in enumerate(model.clusterCenters())]
-    cent_df = F.broadcast(corpus.sparkSession.createDataFrame(
-        centroids, "cell int, centroid array<double>"))
+    cent_df = F.broadcast(domain.local_frame(
+        spark, centroids, "cell int, centroid array<double>"))
     # per-(cell, label) occupancy: the filtered-ANN "index statistics" dim
     occ = (corpus.groupBy("cell", F.col("label").alias("qlabel"))
                  .agg(F.count(F.lit(1)).alias("n_in_cell")))
@@ -841,8 +843,8 @@ def q_ann_ivf_pq(spark: SparkSession, sf_dir: str,
 
     centroids = [(ci, [float(x) for x in c])
                  for ci, c in enumerate(model.clusterCenters())]
-    cent_df = F.broadcast(spark.createDataFrame(
-        centroids, "cell int, centroid array<double>"))
+    cent_df = F.broadcast(domain.local_frame(
+        spark, centroids, "cell int, centroid array<double>"))
     q = (embeddings_df(spark, sf_dir)
          .filter(F.col("vec_id") < N_QUERIES)
          .select(F.col("vec_id").alias("query_id"),

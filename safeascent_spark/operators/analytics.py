@@ -1684,7 +1684,6 @@ ROLLING_DISTINCT_DAYS = 7
 
 
 def q_events_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = domain.load_table(spark, sf_dir, "events")
     # r12: the HLL leg aggregates the SAME distinct (day, user) frame as
     # the exact leg instead of re-scanning raw events — sketch register
     # state is duplicate-insensitive, so the sketches (and the 5%
@@ -1693,39 +1692,35 @@ def q_events_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint of `du` was A/B-measured at +0.2s here — the
     # materialization job costs more than the saved re-derivations at
     # this frame size — so the lineage recompute stays.)
-    du = e.select(_epoch_day("ts").alias("day"), "user_id").distinct()
-    days = du.select("day").distinct()
-    spread = du.select(
-        "user_id",
-        F.explode(F.sequence(
-            F.col("day"),
-            F.col("day") + (ROLLING_DISTINCT_DAYS - 1))).alias("tday"))
-    exact = (spread.join(F.broadcast(days.withColumnRenamed("day", "tday")),
-                         "tday")
-                   .groupBy("tday")
-                   .agg(F.count_distinct("user_id").cast("bigint")
-                         .alias("n_distinct_7d")))
-    # mergeable-sketch leg: per-day sketches, unioned per window
-    daily_sk = (du.groupBy("day")
-                  .agg(F.hll_sketch_agg("user_id").alias("sk")))
-    sk_spread = daily_sk.select(
-        "sk",
-        F.explode(F.sequence(
-            F.col("day"),
-            F.col("day") + (ROLLING_DISTINCT_DAYS - 1))).alias("tday"))
-    est = (sk_spread.join(F.broadcast(days.withColumnRenamed("day",
-                                                             "tday")),
-                          "tday")
-                    .groupBy("tday")
-                    .agg(F.hll_sketch_estimate(
-                        F.hll_union_agg("sk")).alias("hll_est")))
-    return (exact.join(F.broadcast(est), "tday")
-                 .select(F.col("tday").alias("day"), "n_distinct_7d",
-                         (F.abs(F.col("hll_est")
-                                - F.col("n_distinct_7d")) * 100
-                          <= F.col("n_distinct_7d") * 5)
-                         .alias("hll_within_5pct"))
-                 .orderBy("day"))
+    # One SQL text: a handful of py4j calls, not one per Column call
+    # (ARCHITECTURE.md, "The Python boundary").
+    last = ROLLING_DISTINCT_DAYS - 1
+    return spark.sql(f"""
+WITH du AS (SELECT DISTINCT ts div {_DAY_NS} AS day, user_id FROM {{e}}),
+days AS (SELECT DISTINCT day FROM du),
+exact AS (
+  SELECT /*+ BROADCAST(d) */ tday,
+         CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct_7d
+  FROM (SELECT user_id, explode(sequence(day, day + {last})) AS tday
+        FROM du)
+  JOIN (SELECT day AS tday FROM days) d USING (tday)
+  GROUP BY tday
+),
+-- mergeable-sketch leg: per-day sketches, unioned per window
+est AS (
+  SELECT /*+ BROADCAST(d) */ tday,
+         hll_sketch_estimate(hll_union_agg(sk)) AS hll_est
+  FROM (SELECT sk, explode(sequence(day, day + {last})) AS tday
+        FROM (SELECT day, hll_sketch_agg(user_id) AS sk FROM du
+              GROUP BY day))
+  JOIN (SELECT day AS tday FROM days) d USING (tday)
+  GROUP BY tday
+)
+SELECT /*+ BROADCAST(est) */ tday AS day, n_distinct_7d,
+       abs(hll_est - n_distinct_7d) * 100 <= n_distinct_7d * 5
+         AS hll_within_5pct
+FROM exact JOIN est USING (tday)
+ORDER BY day""", e=domain.load_table(spark, sf_dir, "events"))
 
 
 def sql_events_rolling_distinct() -> str:

@@ -133,7 +133,7 @@ def _driver_cc(spark: SparkSession, cur: DataFrame) -> DataFrame:
     out = sorted((n, find(n)) for n in nodes)
     schema = StructType([StructField("node", t, False),
                          StructField("component", t, False)])
-    return spark.createDataFrame(out, schema)
+    return domain.local_frame(spark, out, schema)
 
 
 def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> DataFrame:

@@ -1213,16 +1213,6 @@ Q21_TOP = 20
 
 def q_tpch_q21_lone_late_supplier(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    o = (domain.load_table(spark, sf_dir, "orders")
-         .select("o_orderkey", F.col("o_orderdate").cast("date").alias("od")))
-    li = (domain.load_table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey",
-                  F.col("l_shipdate").cast("date").alias("sd")))
-    flagged = (li.join(o, li.l_orderkey == o.o_orderkey)
-                 .select("l_orderkey", "l_suppkey",
-                         (F.col("sd") > F.date_add(F.col("od"),
-                                                   Q21_LATE_DAYS))
-                          .cast("int").alias("late")))
     # r12: the two countDistincts planned as an Expand x3 of the joined
     # fact (Spark's multi-distinct rewrite) — pre-aggregating to the
     # (order, supplier) grain first makes both distinct counts plain
@@ -1232,33 +1222,45 @@ def q_tpch_q21_lone_late_supplier(spark: SparkSession,
     # row replication before the shuffle.
     # r13 (guide §2.4 share one exchange): the chain shuffled TWICE — by
     # (order, supplier) for per_pair, then by order for per_order.  One
-    # explicit repartition on l_orderkey satisfies ClusteredDistribution
+    # explicit DISTRIBUTE BY l_orderkey satisfies ClusteredDistribution
     # for BOTH aggregates (same-key rows land together), so the fact
     # grain crosses the network once; the map-side combine the first
     # exchange had bought was near-nil (lineitem's (order, supplier)
     # pairs are almost all distinct already).  No explicit width: the
     # exchange starts at spark.sql.shuffle.partitions and AQE coalesces
     # it (on by default since Spark 3.2; session.py sets it explicitly).
-    per_pair = (flagged.repartition("l_orderkey")
-                .groupBy("l_orderkey", "l_suppkey")
-                .agg(F.max("late").alias("any_late")))
-    per_order = (per_pair.groupBy("l_orderkey")
-                 .agg(F.count(F.lit(1)).alias("ns"),
-                      F.sum("any_late").alias("n_late_supp"),
-                      F.max(F.when(F.col("any_late") == 1,
-                                   F.col("l_suppkey")))
-                       .alias("lone_supp")))
-    lone = per_order.filter((F.col("ns") > 1) & (F.col("n_late_supp") == 1))
-    supp = (domain.load_table(spark, sf_dir, "supplier")
-            .select("s_suppkey", "s_name"))
-    return (lone.groupBy("lone_supp")
-                .agg(F.count(F.lit(1)).cast("bigint").alias("numwait"))
-                .join(F.broadcast(supp),
-                      F.col("lone_supp") == F.col("s_suppkey"))
-                .select(F.col("s_suppkey").cast("bigint").alias("s_suppkey"),
-                        "s_name", "numwait")
-                .orderBy(F.col("numwait").desc(), F.col("s_suppkey"))
-                .limit(Q21_TOP))
+    # One SQL text: a handful of py4j calls, not one per Column call
+    # (ARCHITECTURE.md, "The Python boundary").
+    t = lambda name: domain.load_table(spark, sf_dir, name)
+    return spark.sql(f"""
+WITH flagged AS (
+  SELECT l_orderkey, l_suppkey,
+         CAST(sd > date_add(od, {Q21_LATE_DAYS}) AS INT) AS late
+  FROM (SELECT l_orderkey, l_suppkey, CAST(l_shipdate AS DATE) AS sd
+        FROM {{lineitem}})
+  JOIN (SELECT o_orderkey, CAST(o_orderdate AS DATE) AS od FROM {{orders}})
+    ON l_orderkey = o_orderkey
+),
+per_pair AS (
+  SELECT l_orderkey, l_suppkey, max(late) AS any_late
+  FROM (SELECT * FROM flagged DISTRIBUTE BY l_orderkey)
+  GROUP BY l_orderkey, l_suppkey
+),
+per_order AS (
+  SELECT l_orderkey, count(1) AS ns, sum(any_late) AS n_late_supp,
+         max(CASE WHEN any_late = 1 THEN l_suppkey END) AS lone_supp
+  FROM per_pair GROUP BY l_orderkey
+),
+supp AS (SELECT s_suppkey, s_name FROM {{supplier}})
+SELECT /*+ BROADCAST(supp) */ CAST(s_suppkey AS BIGINT) AS s_suppkey,
+       s_name, numwait
+FROM (SELECT lone_supp, CAST(count(1) AS BIGINT) AS numwait
+      FROM per_order WHERE ns > 1 AND n_late_supp = 1
+      GROUP BY lone_supp)
+JOIN supp ON lone_supp = s_suppkey
+ORDER BY numwait DESC, s_suppkey
+LIMIT {Q21_TOP}""", lineitem=t("lineitem"), orders=t("orders"),
+                     supplier=t("supplier"))
 
 
 def sql_tpch_q21_lone_late_supplier() -> str:
@@ -1861,58 +1863,60 @@ Q2_SIZE_LO, Q2_SIZE_HI = 10, 20
 
 
 def q_tpch_q2_mincost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    reg = (domain.load_table(spark, sf_dir, "region")
-           .filter(F.col("r_name") == Q2_REGION).select("r_regionkey"))
-    nat = (domain.load_table(spark, sf_dir, "nation")
-           .join(F.broadcast(reg),
-                 F.col("n_regionkey") == F.col("r_regionkey"))
-           .select("n_nationkey", "n_name"))
-    supp = (domain.load_table(spark, sf_dir, "supplier")
-            .join(F.broadcast(nat),
-                  F.col("s_nationkey") == F.col("n_nationkey"))
-            .select("s_suppkey", "s_name",
-                    F.expr("CAST(floor(s_acctbal * 100) AS BIGINT)")
-                     .alias("bal_c"),
-                    "n_name"))
-    part = (domain.load_table(spark, sf_dir, "part")
-            .filter((F.col("p_type") == Q2_TYPE)
-                    & F.col("p_size").between(Q2_SIZE_LO, Q2_SIZE_HI))
-            .select("p_partkey", "p_brand"))
-    li = (domain.load_table(spark, sf_dir, "lineitem")
-          .select("l_partkey", "l_suppkey",
-                  # floor() inside the cast (ADVICE r9): Spark's
-                  # double->bigint cast truncates while DuckDB's CAST
-                  # rounds half-even, so a non-integral quantity would
-                  # silently diverge between engine and oracle.  The
-                  # fixture IS integral (asserted in
-                  # tests/test_advice_r10.py), but the guard makes the
-                  # idiom self-defending — same device as floor(x*100).
-                  F.expr("CAST(floor(l_extendedprice * 100) AS BIGINT)"
-                         " * 1000 div CAST(floor(l_quantity) AS BIGINT)")
-                   .alias("unit_mc")))
-    ps = (li.groupBy("l_partkey", "l_suppkey")
-            .agg(F.min("unit_mc").alias("cost_mc")))
-    cand = (ps.join(F.broadcast(part),
-                    ps.l_partkey == part.p_partkey)
-              .join(F.broadcast(supp),
-                    ps.l_suppkey == supp.s_suppkey)
-              .select("p_partkey", "p_brand", "cost_mc",
-                      "s_name", "bal_c", "n_name"))
+    # floor() inside the cast of l_quantity (ADVICE r9): Spark's
+    # double->bigint cast truncates while DuckDB's CAST rounds half-even,
+    # so a non-integral quantity would silently diverge between engine
+    # and oracle.  The fixture IS integral (asserted in
+    # tests/test_advice_r10.py), but the guard makes the idiom
+    # self-defending — same device as floor(x*100).
     # r12 (guide §2.4): the per-part MIN rides a window over the single
     # cand pass instead of a groupBy + broadcast join-back, which
     # derived cand — and its lineitem aggregate underneath — twice.
     # The window shuffles only the filtered candidate slice (part-type
     # slice x region suppliers), and per-part groups are bounded by the
     # supplier count, so no skewed partition exists.
-    from pyspark.sql import Window
-    min_w = Window.partitionBy("p_partkey")
-    return (cand.withColumn("min_mc", F.min("cost_mc").over(min_w))
-                .filter(F.col("cost_mc") == F.col("min_mc"))
-                .select("bal_c", "s_name", "n_name",
-                        "p_partkey", "p_brand", "cost_mc")
-                .orderBy(F.col("bal_c").desc(), "n_name", "s_name",
-                         "p_partkey")
-                .limit(100))
+    # One SQL text: a handful of py4j calls, not one per Column call
+    # (ARCHITECTURE.md, "The Python boundary").
+    t = lambda name: domain.load_table(spark, sf_dir, name)
+    return spark.sql(f"""
+WITH reg AS (
+  SELECT r_regionkey FROM {{region}} WHERE r_name = '{Q2_REGION}'
+),
+nat AS (
+  SELECT /*+ BROADCAST(reg) */ n_nationkey, n_name
+  FROM {{nation}} JOIN reg ON n_regionkey = r_regionkey
+),
+supp AS (
+  SELECT /*+ BROADCAST(nat) */ s_suppkey, s_name,
+         CAST(floor(s_acctbal * 100) AS BIGINT) AS bal_c, n_name
+  FROM {{supplier}} JOIN nat ON s_nationkey = n_nationkey
+),
+part AS (
+  SELECT p_partkey, p_brand FROM {{part}}
+  WHERE p_type = '{Q2_TYPE}' AND p_size BETWEEN {Q2_SIZE_LO} AND {Q2_SIZE_HI}
+),
+ps AS (
+  SELECT l_partkey, l_suppkey, min(unit_mc) AS cost_mc
+  FROM (SELECT l_partkey, l_suppkey,
+               CAST(floor(l_extendedprice * 100) AS BIGINT)
+               * 1000 div CAST(floor(l_quantity) AS BIGINT) AS unit_mc
+        FROM {{lineitem}})
+  GROUP BY l_partkey, l_suppkey
+),
+cand AS (
+  SELECT /*+ BROADCAST(part), BROADCAST(supp) */
+         p_partkey, p_brand, cost_mc, s_name, bal_c, n_name
+  FROM ps JOIN part ON l_partkey = p_partkey
+  JOIN supp ON l_suppkey = s_suppkey
+)
+SELECT bal_c, s_name, n_name, p_partkey, p_brand, cost_mc
+FROM (SELECT *, min(cost_mc) OVER (PARTITION BY p_partkey) AS min_mc
+      FROM cand)
+WHERE cost_mc = min_mc
+ORDER BY bal_c DESC, n_name, s_name, p_partkey
+LIMIT 100""", region=t("region"), nation=t("nation"),
+                     supplier=t("supplier"), part=t("part"),
+                     lineitem=t("lineitem"))
 
 
 def sql_tpch_q2_mincost() -> str:

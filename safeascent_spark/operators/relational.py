@@ -224,8 +224,8 @@ def q_predict_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep accident if within 50km OR route-type weight >= 0.85; count
     survivors per planning type for a fixed query point."""
     a = domain.accidents_df(spark, sf_dir)
-    planning = spark.createDataFrame(
-        [(t,) for t in ["alpine", "sport"]], "planning_type string")
+    planning = domain.local_frame(
+        spark, [(t,) for t in ["alpine", "sport"]], "planning_type string")
     pairs = planning.crossJoin(a)
     dist = K.haversine_km(F.lit(REF_LAT), F.lit(REF_LON), "latitude", "longitude")
     rtw = K.route_type_weight("planning_type", "route_type")

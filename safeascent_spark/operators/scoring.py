@@ -112,8 +112,8 @@ def accident_class_dim(spark: SparkSession, sf_dir: str,
         F.floor(F.col("longitude") / cell_lon).cast("int").alias("a_cy"),
         F.col("wbucket").alias("acc_bucket"),
     )
-    rt = spark.createDataFrame([(t,) for t in domain.ROUTE_TYPE_BY_MOD],
-                               "route_type string")
+    rt = domain.local_frame(spark, [(t,) for t in domain.ROUTE_TYPE_BY_MOD],
+                            "route_type string")
     ax = F.broadcast(rt).crossJoin(a)
     tfac = (K.temporal_weight(F.to_date(F.lit(pred_date)), "accident_date",
                               "route_type")
@@ -686,8 +686,8 @@ def factor_breakdown_df(spark: SparkSession, sf_dir: str,
     r = G.grade_difficulty_join(
         routes.join(F.broadcast(locations), "location_id"),
         "grade", "r_diff", dim=gdim)
-    rt = spark.createDataFrame([(t,) for t in domain.ROUTE_TYPE_BY_MOD],
-                               "route_type string")
+    rt = domain.local_frame(spark, [(t,) for t in domain.ROUTE_TYPE_BY_MOD],
+                            "route_type string")
     a = G.grade_difficulty_join(accidents, "grade", "a_diff", dim=gdim) \
          .select("accident_id", "accident_date", "severity", "a_diff",
                  F.col("route_type").alias("a_type"),

@@ -28,10 +28,9 @@ DIM = 64
 def embeddings_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = domain.load_table(spark, sf_dir, "embeddings")
     # float -> double once at the scan so all math is double precision
-    return e.select(
+    return e.selectExpr(
         "vec_id", "label",
-        F.transform(F.col("embedding"), lambda x: x.cast("double"))
-         .alias("vec"))
+        "transform(embedding, x -> CAST(x AS DOUBLE)) AS vec")
 
 
 def _dot(a, b):
@@ -352,22 +351,37 @@ def corpus_with_twins_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((d*7 % 11) - 5)/255 (d = 0-based index) — deterministic, cosine ~0.998.
     """
     e = embeddings_df(spark, sf_dir)
-    twins = (e.filter(F.col("vec_id") < TWIN_COUNT)
-              .select((F.col("vec_id") + TWIN_OFFSET).alias("vec_id"),
-                      "label",
-                      F.transform(
-                          "vec",
-                          lambda x, i: x + ((i * 7) % 11 - 5) / F.lit(255.0))
-                       .alias("vec")))
+    # y is the 0-based index (PySpark's own name for a lambda's 2nd arg)
+    twins = e.filter(f"vec_id < {TWIN_COUNT}").selectExpr(
+        f"vec_id + {TWIN_OFFSET} AS vec_id", "label",
+        "transform(vec, (x, y) -> x + ((y * 7) % 11 - 5) / 255.0D) AS vec")
     return e.unionByName(twins)
 
 
-def _quantize_vec(vec):
-    """int8 scalar quantization (same recipe as quantized_df)."""
-    return F.transform(
-        vec,
-        lambda x: F.round(F.greatest(F.lit(-1.0), F.least(F.lit(1.0), x))
-                          * 127, 0).cast("long"))
+def _quantize_sql(vec: str) -> str:
+    """int8 scalar quantization of array column ``vec`` (same recipe as
+    quantized_df), as SQL text."""
+    return (f"transform({vec}, x -> CAST(round(greatest(-1.0D, "
+            f"least(1.0D, x)) * 127, 0) AS BIGINT))")
+
+
+def _idot_sql(a: str, b: str) -> str:
+    """Integer dot product of two long-array columns as SQL text (exact,
+    order-independent)."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, "
+            f"(x, y) -> x + y)")
+
+
+def _band0_cell_sql(qvec: str) -> str:
+    """Band 0 of ``band_signatures_df`` as one JVM expression: bit j is
+    set iff the quantized vector's integer projection on plane j is
+    positive.  Integer-exact, so it equals the Arrow pass bit for bit."""
+    bits = []
+    for j in range(BAND_BITS):
+        plane = ", ".join(str(_band_plane(j, d)) for d in range(DIM))
+        dot = _idot_sql(qvec, f"array({plane})")
+        bits.append(f"IF({dot} > 0, {1 << j}L, 0L)")
+    return " + ".join(bits)
 
 
 def band_signatures_df(corpus: DataFrame) -> DataFrame:
@@ -404,7 +418,7 @@ def band_signatures_df(corpus: DataFrame) -> DataFrame:
                 "sig": sigs.reshape(-1),
             })
 
-    q = corpus.select("vec_id", _quantize_vec(F.col("vec")).alias("qvec"))
+    q = corpus.selectExpr("vec_id", f"{_quantize_sql('vec')} AS qvec")
     return q.mapInPandas(gen, "vec_id long, band int, sig long")
 
 
@@ -585,6 +599,9 @@ ORDER BY query_id, rank"""
 # as the near-dup banding above) rather than a k-means cell: identical
 # partition-then-prune semantics, but exactly reproducible in ANSI SQL, so
 # the DuckDB oracle checks full values instead of a recall certificate.
+# Only band 0 is needed, so it is one generated JVM expression over the
+# 16 integer planes (``_band0_cell_sql``) rather than the Arrow pass: a
+# Python worker's per-task setup cost more than the whole cell.
 # (The k-means-cell variant of the same pattern lives in ml.py as
 # embedding_kmeans_cells + ann_ivf_topk.)  The keep rule is the
 # deterministic parallel form: v is pruned iff SOME u < v in its cell has
@@ -595,22 +612,14 @@ SEMDEDUP_TAU_NUM = 9    # tau = 0.9, kept as a ratio for integer-exact math
 SEMDEDUP_TAU_DEN = 10
 
 
-def _idot(a, b):
-    """Integer dot product over long arrays (exact, order-independent)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
 @domain.checkpointed("semdedup_cell_frame", scope="invocation")
 def _semdedup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, cell, qvec, n2): the signed + quantized corpus."""
-    corpus = corpus_with_twins_df(spark, sf_dir)
-    cells0 = (band_signatures_df(corpus)
-              .filter(F.col("band") == 0)
-              .select("vec_id", F.col("sig").alias("cell")))
-    q = corpus.select("vec_id", _quantize_vec(F.col("vec")).alias("qvec"))
-    return (cells0.join(q, "vec_id")
-                  .withColumn("n2", _idot(F.col("qvec"), F.col("qvec"))))
+    """(vec_id, cell, qvec, n2): the quantized corpus, its band-0 cell and
+    its squared norm, all computed in the JVM."""
+    return (corpus_with_twins_df(spark, sf_dir)
+            .selectExpr("vec_id", f"{_quantize_sql('vec')} AS qvec")
+            .selectExpr("vec_id", f"{_band0_cell_sql('qvec')} AS cell",
+                        "qvec", f"{_idot_sql('qvec', 'qvec')} AS n2"))
 
 
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -628,34 +637,28 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     so cells scale out embarrassingly; a skewed hot cell is AQE-splittable
     because the join is a plain equi-join.
     """
-    # r12 (guide §3.3): materialize the signed+quantized corpus once.
-    # It feeds three subtrees (both sides of the cell self-join and the
-    # final cells projection), each of which previously recomputed the
-    # twin union + SRP signatures + quantization; with one checkpoint
-    # the self-join's sides are identical subtrees, so the cell shuffle
-    # itself is computed once and reused.
-    m = _semdedup_cells(spark, sf_dir)
-    cells = m.select("vec_id", "cell")
-    a = m.select(F.col("vec_id").alias("va"), "cell",
-                 F.col("qvec").alias("qa"), F.col("n2").alias("na2"))
-    b = m.select(F.col("vec_id").alias("vb"), "cell",
-                 F.col("qvec").alias("qb"), F.col("n2").alias("nb2"))
-    pairs = (a.join(b, "cell")
-              .filter((F.col("va") < F.col("vb"))
-                      & (F.col("na2") > 0) & (F.col("nb2") > 0)))
-    dot = _idot(F.col("qa"), F.col("qb"))
-    dup = (dot >= 0) & (dot * dot * F.lit(SEMDEDUP_TAU_DEN ** 2)
-                        >= F.lit(SEMDEDUP_TAU_NUM ** 2)
-                           * F.col("na2") * F.col("nb2"))
-    pruned = (pairs.filter(dup)
-                   .select(F.col("vb").alias("vec_id"))
-                   .distinct()
-                   .withColumn("is_pruned", F.lit(True)))
-    return (cells.join(pruned, "vec_id", "left")
-                 .select("vec_id", "cell",
-                         F.coalesce(F.col("is_pruned"), F.lit(False))
-                          .alias("pruned"))
-                 .orderBy("vec_id"))
+    # The signed + quantized corpus is materialized once: it feeds both
+    # sides of the cell self-join and the final cells projection, which
+    # would each recompute the twin union, the cell and the quantization;
+    # with one checkpoint the self-join's sides are identical subtrees,
+    # so the cell shuffle itself is computed once and reused.
+    dot = _idot_sql("qa", "qb")
+    return spark.sql(f"""
+WITH a AS (SELECT vec_id AS va, cell, qvec AS qa, n2 AS na2 FROM {{m}}),
+b AS (SELECT vec_id AS vb, cell, qvec AS qb, n2 AS nb2 FROM {{m}}),
+pairs AS (
+  SELECT * FROM a JOIN b USING (cell)
+  WHERE va < vb AND na2 > 0 AND nb2 > 0
+),
+pruned AS (
+  SELECT vec_id, true AS is_pruned FROM (
+    SELECT DISTINCT vb AS vec_id FROM pairs
+    WHERE {dot} >= 0 AND {dot} * {dot} * {SEMDEDUP_TAU_DEN ** 2}
+                         >= {SEMDEDUP_TAU_NUM ** 2} * na2 * nb2)
+)
+SELECT vec_id, cell, coalesce(is_pruned, false) AS pruned
+FROM (SELECT vec_id, cell FROM {{m}}) LEFT JOIN pruned USING (vec_id)
+ORDER BY vec_id""", m=_semdedup_cells(spark, sf_dir))
 
 
 def sql_dedup_semantic() -> str:
@@ -1606,8 +1609,8 @@ def q_sample_coreset_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
                               F.least("mind", d2_to(top.qvec))
                                .alias("mind")))
     rows = [(0, FPS_SEED_ID, 0)] + picked
-    return spark.createDataFrame(
-        rows, "sel_round INT, center_id BIGINT, dist2_to_set BIGINT")
+    return domain.local_frame(
+        spark, rows, "sel_round INT, center_id BIGINT, dist2_to_set BIGINT")
 
 
 def sql_sample_coreset_fps() -> str:

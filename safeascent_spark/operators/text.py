@@ -1703,9 +1703,9 @@ def q_bpe_train(spark: SparkSession, sf_dir: str,
     """The first n_merges BPE merges over the corpus: (step, lhs, rhs,
     merged, pair_count)."""
     merges, _ = _bpe_train_states(spark, sf_dir, n_merges)
-    return spark.createDataFrame(
-        merges, "step int, lhs string, rhs string, merged string, "
-                "pair_count bigint").orderBy("step")
+    return domain.local_frame(
+        spark, merges, "step int, lhs string, rhs string, merged string, "
+                       "pair_count bigint").orderBy("step")
 
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str,
@@ -2083,7 +2083,7 @@ def q_text_bm25_multi(spark: SparkSession, sf_dir: str,
     n_docs, avgdl = _bm25_stats(base)
     qrows = [(qid, t) for qid, ts in sorted(BM25_QUERIES.items())
              for t in ts]
-    qdim = spark.createDataFrame(qrows, "query_id int, word string")
+    qdim = domain.local_frame(spark, qrows, "query_id int, word string")
     posting = (base.select("doc_id", "dl", F.explode("qw").alias("word"))
                    .groupBy("doc_id", "dl", "word")
                    .agg(F.count(F.lit(1)).cast("bigint").alias("tf")))
@@ -2674,16 +2674,6 @@ def q_text_vocab_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fan_out: per-token explode CPU vastly exceeds the scan bytes (the
     # text_char_trigram_profile lesson — no-op on well-split inputs)
     d = domain.fan_out(docs_df(spark, sf_dir))
-    ws = F.filter(F.split(F.col("text"), " "), lambda x: x != F.lit(""))
-    toks = d.select(F.expr(f"doc_id div {NOVELTY_BUCKET}").alias("bkt"),
-                    ws.alias("ws"))
-    idx = F.when(F.size("ws") >= W,
-                 F.sequence(F.lit(1), F.size("ws") - (W - 1))) \
-           .otherwise(F.array().cast("array<int>"))
-    grams = toks.select("bkt", F.explode(F.transform(
-                idx, lambda i: F.xxhash64(
-                    F.concat_ws(" ", F.slice("ws", i, W)))))
-                .alias("gk"))
     # ONE aggregation chain instead of two branches over the exploded
     # gram stream (r12, guide §2.4/§5): the previous per_bkt/first pair
     # each re-derived the tokenize + explode + distinct subtree (two
@@ -2697,23 +2687,33 @@ def q_text_vocab_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # A bucket whose every trigram was already seen in earlier buckets
     # still surfaces with n_new_grams=0 (ADVICE r8): it appears in every
     # containing gram's set regardless of being anyone's min.
-    per_gram = grams.groupBy("gk").agg(
-        F.collect_set("bkt").alias("bkts"))
-    exploded = per_gram.select(
-        F.array_min("bkts").alias("min_bkt"),
-        F.explode("bkts").alias("bkt"))
-    return (exploded.groupBy("bkt")
-                    .agg(F.count(F.lit(1)).cast("bigint")
-                          .alias("n_distinct_grams"),
-                         F.sum(F.when(F.col("bkt") == F.col("min_bkt"), 1)
-                                .otherwise(0)).cast("bigint")
-                          .alias("n_new_grams"))
-                    .select(F.col("bkt").cast("bigint").alias("bucket"),
-                            "n_distinct_grams", "n_new_grams",
-                            F.expr("CAST(n_new_grams * 1000000"
-                                   " div n_distinct_grams AS BIGINT)")
-                             .alias("novelty_ppm"))
-                    .orderBy("bucket"))
+    # One SQL text: a handful of py4j calls, not one per Column call
+    # (ARCHITECTURE.md, "The Python boundary").
+    return spark.sql(f"""
+WITH toks AS (
+  SELECT doc_id div {NOVELTY_BUCKET} AS bkt,
+         filter(split(text, ' '), x -> x != '') AS ws
+  FROM {{d}}
+),
+grams AS (
+  SELECT bkt, explode(transform(
+           CASE WHEN size(ws) >= {W} THEN sequence(1, size(ws) - {W - 1})
+                ELSE CAST(array() AS ARRAY<INT>) END,
+           x -> xxhash64(concat_ws(' ', slice(ws, x, {W}))))) AS gk
+  FROM toks
+),
+exploded AS (
+  SELECT array_min(bkts) AS min_bkt, explode(bkts) AS bkt
+  FROM (SELECT gk, collect_set(bkt) AS bkts FROM grams GROUP BY gk)
+)
+SELECT CAST(bkt AS BIGINT) AS bucket, n_distinct_grams, n_new_grams,
+       CAST(n_new_grams * 1000000 div n_distinct_grams AS BIGINT)
+         AS novelty_ppm
+FROM (SELECT bkt, CAST(count(1) AS BIGINT) AS n_distinct_grams,
+             CAST(sum(CASE WHEN bkt = min_bkt THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_new_grams
+      FROM exploded GROUP BY bkt)
+ORDER BY bucket""", d=d)
 
 
 def sql_text_vocab_novelty() -> str:

@@ -1,4 +1,6 @@
-"""SparkSession factory tuned for the local[32] test harness.
+"""SparkSession factory for local runs: ``local[n]`` with n shuffle
+partitions, n = the CPUs this process may run on (``SPARK_GRAFT_CPUS``
+overrides).
 
 At cluster scale the same code runs unchanged — only master/memory change;
 AQE handles runtime re-planning (partition coalescing, skew joins).
@@ -27,9 +29,16 @@ def _default_driver_memory() -> str:
     return f"{max(1, min(16, phys // 2 // 2**30))}g"
 
 
+def _default_cpus() -> int:
+    """Local parallelism when ``SPARK_GRAFT_CPUS`` is unset: the CPUs this
+    process may run on.  A fixed ``local[32]`` on a 4-core machine ran a
+    3-row frame as 32 tasks and wrote one file per non-empty task."""
+    return len(os.sched_getaffinity(0))
+
+
 def get_spark(app_name: str = "safeascent_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(_default_cpus())
     parts = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder

@@ -110,7 +110,7 @@ def _s8_read_frame(spark: SparkSession, sf_dir: str,
            scores.filter(F.col("route_id") % S8_MGET_MOD == 3)
                  .select("route_id").orderBy("route_id")
                  .limit(S8_MGET_LIMIT).collect()]
-    req = spark.createDataFrame(ids, "route_id bigint")
+    req = domain.local_frame(spark, ids, "route_id bigint")
     return (txlog.read_snapshot(spark, tmp, partition=domain.PRED_DATE)
             .join(F.broadcast(req), "route_id", "left_semi")
             .select("route_id", "risk_score", "color_code",

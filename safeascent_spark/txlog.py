@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from . import domain
+
 
 class CommitConflict(RuntimeError):
     """Another writer advanced the table while this commit was retried out."""
@@ -352,7 +354,7 @@ def read_snapshot(spark: SparkSession, root: str,
                 df = df.filter(_outside(key, dead))
             frames.append(df.withColumn("prediction_date", F.lit(pval)))
     if not frames:
-        return spark.createDataFrame([], f"{key} bigint") \
+        return domain.local_frame(spark, [], f"{key} bigint") \
             .withColumn("prediction_date", F.lit(None).cast("string"))
     out = frames[0]
     for f in frames[1:]:
@@ -747,8 +749,8 @@ def table_changes(spark: SparkSession, root: str, v_from: int, v_to: int,
         delta = delta.withColumn("_partition", F.lit(part))
         out = delta if out is None else out.unionByName(delta)
     if out is None:
-        return spark.createDataFrame(
-            [], f"{key} bigint, _change_type string, _partition string")
+        return domain.local_frame(
+            spark, [], f"{key} bigint, _change_type string, _partition string")
     return out
 
 

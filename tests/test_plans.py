@@ -277,11 +277,17 @@ def test_embedding_neardup_finds_seeded_twins(spark):
 
 def test_codegen_covers_scoring_stage(spark):
     # formatted mode omits codegen annotations; simple mode marks codegen'd
-    # operators with "*(n)"
+    # operators with "*(n)".  AQE inserts whole-stage codegen as it plans
+    # each stage, so the markers are read from the final plan, after the
+    # query ran: the pair projection (the haversine's EXP) must carry one.
+    # Before the run, the only markers were in cached subtrees' plans.
     df = scoring.risk_scores_df(spark, SF_SMOKE)
+    df.collect()
     simple = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "simple")
     assert simple.count("*(") >= 1
+    assert re.search(r"\*\(\d+\) Project \[[^\n]*EXP\(", simple), \
+        simple[:3000]
 
 
 def test_text_chunks_single_exchange(spark):
