@@ -410,7 +410,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "w_similarity": W.q_weather_similarity,
         "skew_salted_sum": SK.q_skew_salted_sum,
         "text_tfidf_topk": TX.q_text_tfidf,
-        "j5_breadcrumb_recursive": R.q_location_breadcrumb_recursive,
+        "j5_breadcrumb_recursive": R.q_location_breadcrumb,
         "dedup_simhash": D.q_simhash,
         "dedup_simhash_pairs": D.q_dedup_simhash_pairs,
         "ann_cosine_topk": lambda s, sf: SIM.cosine_topk_df(s, sf),
@@ -535,7 +535,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_wav_meta": MM.q_multimodal_wav_meta,
         "k1_haversine": KQ.q_haversine,
         "j5_location_breadcrumb": R.q_location_breadcrumb,
-        "dedup_clusters_largestar": G.q_dedup_clusters_largestar,
+        "dedup_clusters_largestar": D.q_dedup_clusters,
         # peer-relative risk: exact-ppm percent rank within route_type
         "risk_peer_rank": A.q_risk_peer_rank,
         # integer-safe via exact rank-window certification

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from .. import domain
 from . import text as T
+from . import graph as G
 
 HASH_P = 1_000_000_007
 # K=8 minhash linear-hash coefficients (odd a, arbitrary b)
@@ -434,45 +435,11 @@ ORDER BY z.doc_id"""
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate clusters: connected components over the MinHash-LSH
-    candidate graph via iterative min-label propagation (the GraphFrames
-    connected-components algorithm in plain DataFrame ops), with the
-    canonical survivor = min doc_id per component.
-
-    Iterates to a fixpoint with localCheckpoint truncating lineage each
-    round — the standard Spark iterative pattern; rounds are bounded by the
-    component diameter (tiny for dedup graphs).
-    """
-    docs = T.docs_df(spark, sf_dir).select("doc_id")
-    pairs = q_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
-    edges = (pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-                  .unionAll(pairs.select(F.col("doc_b").alias("src"),
-                                         F.col("doc_a").alias("dst"))))
-    edges = edges.cache()
-    labels = docs.select("doc_id", F.col("doc_id").alias("label")) \
-                 .localCheckpoint(eager=True)
-    # Convergence probe: per-doc labels only ever decrease (min-fold), so the
-    # exact total of all labels is strictly decreasing until the fixpoint —
-    # one thin scalar aggregate per round instead of a join+count re-walk.
-    label_total = F.sum(F.col("label").cast("decimal(38,0)"))
-    prev_total = labels.agg(label_total).collect()[0][0]
-    for _ in range(20):
-        prop = (edges.join(labels, edges["src"] == labels["doc_id"])
-                     .select(F.col("dst").alias("doc_id"), "label"))
-        labels = (labels.unionAll(prop)
-                        .groupBy("doc_id")
-                        .agg(F.min("label").alias("label"))
-                        .localCheckpoint(eager=True))
-        total = labels.agg(label_total).collect()[0][0]
-        if total == prev_total:
-            break
-        prev_total = total
-    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
-    return (labels.join(sizes, "label")
-                  .select("doc_id",
-                          F.col("label").alias("cluster_rep"),
-                          "cluster_size",
-                          (F.col("doc_id") == F.col("label")).alias("is_kept"))
-                  .orderBy("doc_id"))
+    candidate graph (``graph.clusters``), with the canonical survivor =
+    min doc_id per component."""
+    return G.clusters(T.docs_df(spark, sf_dir).select("doc_id"),
+                      q_dedup_minhash_lsh(spark, sf_dir)
+                      .select("doc_a", "doc_b"))
 
 
 def q_dedup_filtered_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -969,7 +936,7 @@ def q_sample_softdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     size, as an exact int64 ppm value (band_mult * SCALE // cluster_size) —
     no float arithmetic anywhere, so Spark and DuckDB agree bitwise.
 
-    Scale shape: reuses the CC cluster pass (bounded label-propagation
+    Scale shape: reuses the CC cluster pass (star contraction, O(log n)
     rounds) and one broadcast-free equi-join of the band column onto it;
     the weight itself is a Column expression.  Downstream, sampling
     against weight_ppm is the same hash-mod draw ``sample_mixture`` uses:

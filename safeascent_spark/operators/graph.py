@@ -1,18 +1,21 @@
 """Connected components via alternating large-star / small-star rounds.
 
-The registered ``dedup_clusters`` query uses iterative min-label
-propagation — correct, but its round count is O(component diameter) and
-every round re-joins the FULL edge set.  On a 100 TB corpus a single
-pathological chain (serial near-dup crawl snapshots) makes the diameter —
-and therefore the number of full-edge shuffles — unbounded.
+``connected_components`` is the engine's one connected-components
+operator, and ``clusters`` is the one duplicate-cluster block built on
+it.  ``dedup_clusters``, ``dedup_clusters_largestar`` (the same query
+under its historical name) and ``multimodal_phash_clusters`` all build
+through ``clusters``; ``geo_hotspots`` labels cells with
+``connected_components`` directly.
 
-This module is the scale path: the two-phase star algorithm from
-Kiveris et al., "Connected Components in MapReduce and Beyond" (SoCC'14).
-Each round is one groupBy + one equi-join over the current edge set, the
-edge set only shrinks toward stars, and convergence is O(log n) rounds
-REGARDLESS of diameter.  ``tests/test_graph_cc.py`` proves both the
-equivalence to the label-propagation result and the logarithmic round
-count on a long chain where label propagation would need O(n) rounds.
+The algorithm is the two-phase star contraction of Kiveris et al.,
+"Connected Components in MapReduce and Beyond" (SoCC'14).  Each round
+is one window pass over the current edge set, the edge set only shrinks
+toward stars, and convergence takes O(log n) rounds whatever the
+component diameter.  Min-label propagation, the textbook alternative,
+needs O(diameter) rounds, each re-joining the full edge set, so one
+long chain of near-duplicate crawl snapshots makes it unbounded.
+``tests/test_graph_cc.py`` checks the clusters against a union-find over
+the collected LSH pairs and the round count on a long chain.
 
 Phases (all edges kept as (u, v) with u > v after round 0):
 
@@ -21,10 +24,10 @@ Phases (all edges kept as (u, v) with u > v after round 0):
 * small-star: for every node u over its *smaller* neighbors, link them
   (and u itself) to the minimum.
 
-Reference parity: clusters over the MinHash-LSH candidate graph, same
-output contract as ``dedup.q_dedup_clusters`` (SURVEY §2 dedup family;
-duplicate clustering mirrors the reference's duplicate-report grouping,
-backend/app/services/analytics_service.py).
+Reference parity: duplicate clustering mirrors the reference's
+duplicate-report grouping (backend/app/services/analytics_service.py;
+SURVEY §2 dedup family).  The oracles walk the same pair graph with
+``WITH RECURSIVE`` min-label reachability.
 """
 
 from __future__ import annotations
@@ -32,20 +35,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import dedup as D
-from . import text as T
 from .. import domain
 
 MAX_ROUNDS = 20
 
-# r12: below this many deduplicated edges the star loop is pure driver
-# round-trip latency (each round is a full job over a few thousand rows),
-# so the edge list is collected and solved with union-find instead —
-# the SAME driver-side data budget as a broadcast join build side
-# (1M edges = ~16 MB), parameterised for cluster deployments.  Above the
-# threshold the O(log n) distributed star loop runs unchanged.
-CC_DRIVER_MAX_EDGES = int(
-    __import__("os").environ.get("SPARK_GRAFT_CC_DRIVER_MAX", "1000000"))
+# At or below this many deduplicated edges the star loop is driver
+# round-trip latency (each round is a full job over a small edge set),
+# so the edge list is collected and solved with union-find instead.
+# The union-find result returns as a ``domain.local_frame`` of one row
+# per node, whose VALUES parse costs ~30 µs a row.  On random graphs the
+# two paths tie near 10^5 edges and the star loop wins above; on a chain
+# (the star loop's worst case) the tie moves to ~10^6 (CHANGES.md has
+# the measurements).
+CC_DRIVER_MAX_EDGES = 100_000
 
 
 def _checksum(edges: DataFrame):
@@ -136,37 +138,46 @@ def _driver_cc(spark: SparkSession, cur: DataFrame) -> DataFrame:
     return domain.local_frame(spark, out, schema)
 
 
+def _canonical_edges(edges: DataFrame) -> DataFrame:
+    """Edges (u, v) as distinct (greater, lesser) pairs without self-loops;
+    lazily checkpointed, so the first checksum materializes it."""
+    return (edges.select(F.greatest("u", "v").alias("u"),
+                         F.least("u", "v").alias("v"))
+                 .where(F.col("u") != F.col("v"))
+                 .distinct()
+                 .localCheckpoint(eager=False))
+
+
+def _star_loop(cur: DataFrame, checksum,
+               max_rounds: int = MAX_ROUNDS) -> tuple[DataFrame, int]:
+    """Star rounds over canonical edges until the fixpoint checksum
+    repeats.  Returns the star edge set and the number of rounds run.
+
+    Lineage is cut per round with a lazy checkpoint: the round's checksum
+    is the action that materializes it, so each round is one job; without
+    the cut the plan doubles every round."""
+    for i in range(max_rounds):
+        cur = _star_round(cur).localCheckpoint(eager=False)
+        nxt = _checksum(cur)
+        if nxt == checksum:
+            return cur, i + 1
+        checksum = nxt
+    return cur, max_rounds
+
+
 def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> DataFrame:
     """Star-contraction CC over an undirected edge list (columns u, v).
 
     Returns (node, component) for every node appearing in an edge, where
     component is the minimum node id of its connected component.
-    lineage is truncated per round (localCheckpoint) — the standard Spark
-    iterative pattern; without it the plan doubles every round.
     """
-    # Lazy checkpoints: the per-round fixpoint checksum is the action that
-    # materializes the checkpoint, so each round is ONE job instead of an
-    # eager-checkpoint job followed by a checksum job (r12: halves the
-    # driver round-trip count of the loop; the checksum scans the freshly
-    # persisted blocks, not the lineage).
-    cur = (edges.select(F.greatest("u", "v").alias("u"),
-                        F.least("u", "v").alias("v"))
-                .where(F.col("u") != F.col("v"))
-                .distinct()
-                .localCheckpoint(eager=False))
-    prev_sum = _checksum(cur)
-    # The init checksum already knows the deduplicated edge count, so the
-    # small-graph cutover costs no extra job (r12, guide §1.2/#1: a tiny
-    # contracted graph spends its whole star loop on per-round driver
-    # latency, not compute).
-    if prev_sum[0] <= CC_DRIVER_MAX_EDGES:
+    cur = _canonical_edges(edges)
+    checksum = _checksum(cur)
+    # The first checksum already knows the deduplicated edge count, so the
+    # small-graph cutover costs no extra job.
+    if checksum[0] <= CC_DRIVER_MAX_EDGES:
         return _driver_cc(edges.sparkSession, cur)
-    for _ in range(max_rounds):
-        cur = _star_round(cur).localCheckpoint(eager=False)
-        cur_sum = _checksum(cur)
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
+    cur, _ = _star_loop(cur, checksum, max_rounds)
     # At the fixpoint the edge set is a union of stars: (node, root) for
     # every non-root node.  min() is a no-op safety net at the fixpoint.
     members = cur.groupBy("u").agg(F.min("v").alias("component")) \
@@ -177,42 +188,27 @@ def connected_components(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> Data
     return members.unionAll(roots)
 
 
-def cc_rounds_to_converge(edges: DataFrame, max_rounds: int = MAX_ROUNDS) -> int:
-    """Instrumented variant: number of star rounds until the fixpoint.
-    Used by tests to prove O(log n) convergence on a diameter-n chain."""
-    cur = (edges.select(F.greatest("u", "v").alias("u"),
-                        F.least("u", "v").alias("v"))
-                .where(F.col("u") != F.col("v"))
-                .distinct()
-                .localCheckpoint(eager=False))
-    prev_sum = _checksum(cur)
-    for i in range(max_rounds):
-        cur = _star_round(cur).localCheckpoint(eager=False)
-        cur_sum = _checksum(cur)
-        if cur_sum == prev_sum:
-            return i + 1
-        prev_sum = cur_sum
-    return max_rounds
+def clusters(ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Duplicate clusters over a candidate-pair graph.
 
-
-def q_dedup_clusters_largestar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dedup_clusters`` re-derived through star-contraction CC — identical
-    output contract (doc_id, cluster_rep, cluster_size, is_kept), shares the
-    recursive-SQL oracle with the label-propagation form."""
-    docs = T.docs_df(spark, sf_dir).select("doc_id")
-    pairs = D.q_dedup_minhash_lsh(spark, sf_dir) \
-             .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    comp = connected_components(pairs)
-    labels = (docs.join(comp, docs["doc_id"] == comp["node"], "left")
-                  .select("doc_id",
-                          F.coalesce("component", "doc_id").alias("label")))
+    ``ids`` has one column, the item id; ``pairs`` has two, the ids of a
+    candidate pair.  Returns (<id>, cluster_rep, cluster_size, is_kept)
+    for every id: the representative is the minimum id of the item's
+    connected component (an item in no pair is its own cluster), and
+    the representative is the kept survivor."""
+    key = ids.columns[0]
+    a, b = pairs.columns[:2]
+    comp = connected_components(pairs.select(F.col(a).alias("u"),
+                                             F.col(b).alias("v")))
+    labels = (ids.join(comp, ids[key] == comp["node"], "left")
+                 .select(key, F.coalesce("component", key).alias("label")))
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (labels.join(sizes, "label")
-                  .select("doc_id",
+                  .select(key,
                           F.col("label").alias("cluster_rep"),
                           "cluster_size",
-                          (F.col("doc_id") == F.col("label")).alias("is_kept"))
-                  .orderBy("doc_id"))
+                          (F.col(key) == F.col("label")).alias("is_kept"))
+                  .orderBy(key))
 
 
 # --- Integer fixed-point PageRank over the route/location hierarchy ----------

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import domain
+from . import graph as G
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -868,26 +869,10 @@ ORDER BY media_id, frame_idx"""
 # decide keeps/drops.
 
 def q_multimodal_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .graph import connected_components
-    from .. import domain as _domain
-
-    docs = _domain.load_table(spark, sf_dir, "documents") \
-                  .select(F.col("doc_id").alias("media_id"))
-    pairs = q_multimodal_phash_pairs(spark, sf_dir).select(
-        F.col("media_a").alias("u"), F.col("media_b").alias("v"))
-    comp = connected_components(pairs)
-    labels = (docs.join(comp, docs["media_id"] == comp["node"], "left")
-                  .select("media_id",
-                          F.coalesce("component", "media_id").alias("label")))
-    sizes = labels.groupBy("label").agg(
-        F.count(F.lit(1)).alias("cluster_size"))
-    return (labels.join(sizes, "label")
-                  .select("media_id",
-                          F.col("label").alias("cluster_rep"),
-                          "cluster_size",
-                          (F.col("media_id") == F.col("label"))
-                           .alias("is_kept"))
-                  .orderBy("media_id"))
+    docs = domain.load_table(spark, sf_dir, "documents") \
+                 .select(F.col("doc_id").alias("media_id"))
+    return G.clusters(docs, q_multimodal_phash_pairs(spark, sf_dir)
+                            .select("media_a", "media_b"))
 
 
 def sql_multimodal_phash_clusters() -> str:

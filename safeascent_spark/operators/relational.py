@@ -333,80 +333,40 @@ def breadcrumb_base_df(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise((F.col("location_id") / 10).cast("bigint")))
 
 
-def q_location_breadcrumb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative parent-chain traversal (<= 15 hops), built as a bounded
-    self-join loop — the Spark analog of WITH RECURSIVE for a shallow
-    hierarchy; the dimension is small so each hop is a broadcast join."""
-    base = breadcrumb_base_df(spark, sf_dir)
-    # chain state: (location_id, current, path, depth)
-    chain = base.select(
-        "location_id",
-        F.col("parent_id").alias("current"),
-        F.col("location_id").cast("string").alias("path"),
-        F.lit(1).alias("depth"))
-    parents = base.select(F.col("location_id").alias("p_loc"),
-                          F.col("parent_id").alias("p_parent"))
-    for _ in range(15):
-        if chain.filter(F.col("current").isNotNull()).isEmpty():
-            break
-        chain = (chain.join(F.broadcast(parents),
-                            chain["current"] == parents["p_loc"], "left")
-                      .select(
-                          "location_id",
-                          F.when(F.col("current").isNotNull(), F.col("p_parent"))
-                           .alias("next_current"),
-                          F.when(F.col("current").isNotNull(),
-                                 F.concat(F.col("current").cast("string"),
-                                          F.lit(" > "), F.col("path")))
-                           .otherwise(F.col("path")).alias("path"),
-                          (F.col("depth")
-                           + F.when(F.col("current").isNotNull(), 1)
-                              .otherwise(0)).alias("depth"))
-                      .withColumnRenamed("next_current", "current"))
-    return chain.select("location_id", "path",
-                        F.col("depth").cast("int").alias("depth")) \
-                .orderBy("location_id")
+# A breadcrumb reaches the root within this many parent hops or is
+# dropped, as in the oracle.
+BREADCRUMB_MAX_HOPS = 15
 
 
-_RECURSIVE_CTE_SUPPORT: dict[str, bool] = {}
+def location_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The parent-chain walk every hierarchy query reads: one engine-side
+    ``WITH RECURSIVE`` fixpoint over the (location_id, parent_id) frame.
 
-
-def _supports_recursive_cte(spark: SparkSession) -> bool:
-    """Probe WITH RECURSIVE support once per application (the probe is a
-    real .collect(); re-running it per query build wasted a job each call)."""
-    key = spark.sparkContext.applicationId
-    if key not in _RECURSIVE_CTE_SUPPORT:
-        try:
-            spark.sql("WITH RECURSIVE _probe(n) AS (SELECT 1) "
-                      "SELECT n FROM _probe").collect()
-            _RECURSIVE_CTE_SUPPORT[key] = True
-        except Exception:
-            _RECURSIVE_CTE_SUPPORT[key] = False
-    return _RECURSIVE_CTE_SUPPORT[key]
-
-
-def q_location_breadcrumb_recursive(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
-    """J5 via Spark 4 ``WITH RECURSIVE`` — the fixpoint runs inside the
-    engine with no driver-side loop bound; falls back to the bounded
-    iterative form on engines without recursive-CTE support."""
-    if not _supports_recursive_cte(spark):
-        return q_location_breadcrumb(spark, sf_dir)
-    breadcrumb_base_df(spark, sf_dir).createOrReplaceTempView(
-        "breadcrumb_hier")
+    Rows are (location_id, current, path, depth): ``path`` runs from the
+    last ancestor reached down to the location, ``current`` is that
+    ancestor's parent (NULL once the root is reached) and ``depth`` the
+    number of ids on the path.  The walk stops where the chain ends, so
+    it is unbounded; Spark's recursion-level limit turns a cyclic parent
+    table into an error rather than an endless loop."""
     return spark.sql("""
 WITH RECURSIVE walk(location_id, current, path, depth) AS (
-  SELECT location_id, parent_id, CAST(location_id AS STRING), 1
-  FROM breadcrumb_hier
+  SELECT location_id, parent_id, CAST(location_id AS STRING), 1 FROM {h}
   UNION ALL
   SELECT w.location_id, h.parent_id,
          CAST(w.current AS STRING) || ' > ' || w.path, w.depth + 1
-  FROM walk w JOIN breadcrumb_hier h ON w.current = h.location_id
-  WHERE w.current IS NOT NULL AND w.depth <= 15
+  FROM walk w JOIN {h} h ON w.current = h.location_id
 )
-SELECT location_id, path, CAST(depth AS INT) AS depth
-FROM walk WHERE current IS NULL
-ORDER BY location_id""")
+SELECT * FROM walk""", h=breadcrumb_base_df(spark, sf_dir))
+
+
+def q_location_breadcrumb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """J5: the root-to-location path of every location whose chain
+    reaches the root within BREADCRUMB_MAX_HOPS hops."""
+    return (location_walk(spark, sf_dir)
+            .where(F.col("current").isNull()
+                   & (F.col("depth") <= BREADCRUMB_MAX_HOPS + 1))
+            .select("location_id", "path", "depth")
+            .orderBy("location_id"))
 
 
 def sql_location_breadcrumb() -> str:
@@ -424,7 +384,7 @@ crumbs AS (
     SELECT w.location_id, h.parent_id,
            CAST(w.current AS VARCHAR) || ' > ' || w.path, w.depth + 1
     FROM walk w JOIN hier h ON w.current = h.location_id
-    WHERE w.current IS NOT NULL AND w.depth <= 15
+    WHERE w.current IS NOT NULL AND w.depth <= {BREADCRUMB_MAX_HOPS}
   )
   SELECT location_id, path, depth FROM walk WHERE current IS NULL
 )
@@ -765,35 +725,21 @@ FROM checks ORDER BY check_name"""
 # --- Hierarchical subtree rollup (aggregate over the location tree) ----------
 # The OLAP companion of the J5 breadcrumb: per location, route counts
 # and popularity summed over the location's ENTIRE SUBTREE.  The
-# scalable layout is flatten-then-aggregate: materialize the (node,
-# ancestor) transitive closure of the shallow hierarchy (<= 15 bounded
-# broadcast-join hops over the dimension — never recursion over facts),
-# then one equi-join from the route-grain aggregate onto the closure and
-# one groupBy(ancestor).  Facts are touched exactly once; the recursion
-# only ever walks the small dimension.  The oracle states the closure
-# with WITH RECURSIVE.
+# scalable layout is flatten-then-aggregate: the (node, ancestor)
+# transitive closure of the hierarchy, read from the same recursive walk
+# as the breadcrumb (never recursion over facts), then one equi-join
+# from the route-grain aggregate onto the closure and one
+# groupBy(ancestor).  Facts are touched exactly once; the recursion only
+# ever walks the small dimension.
 
 def _location_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(location_id, ancestor_id) pairs including self-pairs."""
-    base = breadcrumb_base_df(spark, sf_dir)
-    parents = base.select(F.col("location_id").alias("p_loc"),
-                          F.col("parent_id").alias("p_parent"))
-    closure = base.select("location_id",
-                          F.col("location_id").alias("ancestor_id"))
-    frontier = base.select("location_id",
-                           F.col("parent_id").alias("ancestor_id")) \
-                   .filter(F.col("ancestor_id").isNotNull())
-    for _ in range(15):
-        if frontier.isEmpty():
-            break
-        closure = closure.unionByName(frontier)
-        frontier = (frontier.join(
-                        F.broadcast(parents),
-                        frontier["ancestor_id"] == parents["p_loc"])
-                    .select("location_id",
-                            F.col("p_parent").alias("ancestor_id"))
-                    .filter(F.col("ancestor_id").isNotNull()))
-    return closure
+    """(location_id, ancestor_id) pairs including self-pairs: the
+    location, then every ancestor the walk reached."""
+    anc = F.when(F.col("depth") == 1, F.array("location_id", "current")) \
+           .otherwise(F.array("current"))
+    return (location_walk(spark, sf_dir)
+            .select("location_id", F.explode(anc).alias("ancestor_id"))
+            .where(F.col("ancestor_id").isNotNull()))
 
 
 def q_location_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -54,7 +54,7 @@ def get_spark(app_name: str = "safeascent_spark",
         # SMJ.  128m matches the "build side must fit a task's execution
         # memory" budget of the production executor sizing (guide §5).
         .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-                os.environ.get("SPARK_GRAFT_SHJ_THRESHOLD", "128m"))
+                "128m")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # driver-generated parquet stores TIMESTAMP(NANOS,false)

@@ -30,6 +30,9 @@ import sys
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from safeascent_spark.session import get_spark  # noqa: E402
+
 SRC = "/root/testdata/sf0.1"
 N_COPIES = 10
 MOD_LCM = 4200  # lcm of every key-modulus used by domain.py derivations
@@ -65,14 +68,7 @@ def family_offsets(spark: SparkSession) -> dict[str, int]:
 
 
 def main(out_dir: str) -> None:
-    spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .getOrCreate()
-    )
+    spark = get_spark("make_sf1")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(out_dir, exist_ok=True)
     offs = family_offsets(spark)
